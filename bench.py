@@ -118,7 +118,13 @@ def _require_green_suite() -> dict:
     # just split across N concurrent pytest subprocesses (each its own
     # local[8] session; 4 shards saturate the 32-core box).
     # SPARK_GRAFT_GATE_SHARDS=1 restores the single-process gate.
-    n_shards = int(os.environ.get("SPARK_GRAFT_GATE_SHARDS", "4"))
+    raw = os.environ.get("SPARK_GRAFT_GATE_SHARDS", "4")
+    try:
+        n_shards = int(raw)
+    except ValueError:
+        print(f"# SPARK_GRAFT_GATE_SHARDS={raw!r} is not an integer; "
+              f"running 4 shards", file=sys.stderr, flush=True)
+        n_shards = 4
     if n_shards > 1:
         sys.path.insert(0, os.path.join(repo, "tools"))
         from run_suite_sharded import run_sharded

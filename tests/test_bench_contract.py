@@ -326,6 +326,34 @@ def test_green_gate_passes_through(monkeypatch):
                    "tests_summary": "374 passed in 600.00s"}
 
 
+def test_malformed_gate_shards_falls_back_to_four(monkeypatch, capsys):
+    """A non-integer SPARK_GRAFT_GATE_SHARDS must not crash the gate: it
+    runs the default 4 shards and says why on one stderr line."""
+    import subprocess
+
+    calls = []
+
+    class FakeProc:
+        returncode = 0
+        stdout = "5 passed in 1.00s"
+        stderr = ""
+
+    def fake_run(cmd, **kw):
+        calls.append(cmd)
+        return FakeProc()
+
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_REQUIRE_GREEN", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_GATE_SHARDS", "four")
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    out = bench._require_green_suite()
+    assert out["tests_green"] is True
+    assert len(calls) == 4
+    err = capsys.readouterr().err
+    assert [ln for ln in err.splitlines()
+            if "SPARK_GRAFT_GATE_SHARDS='four'" in ln
+            and "4 shards" in ln]
+
+
 def test_sharded_gate_aggregates_and_propagates_failures(monkeypatch):
     """r13 (VERDICT r12 #7): the default gate runs the suite SHARDED —
     same tests, same pass criteria, N concurrent pytest subprocesses.
@@ -367,6 +395,44 @@ def test_sharded_gate_aggregates_and_propagates_failures(monkeypatch):
     all_files = sorted(os.path.relpath(p, rss.REPO) for p in glob.glob(
         os.path.join(rss.REPO, "tests", "test_*.py")))
     assert sorted(sharded_files) == all_files
+
+
+def test_sharded_gate_names_crashed_shard_reason(monkeypatch):
+    """A shard that dies before pytest prints its summary (an import
+    crash, a killed JVM) fails the gate and names its reason: a bounded
+    stderr tail lands in its shard_summaries entry and in ``failed``."""
+    import subprocess
+    import sys
+    import os
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "tools"))
+    import run_suite_sharded as rss
+
+    calls = []
+    noise = "x" * 5000
+
+    def fake_run(cmd, **kw):
+        calls.append(cmd)
+        crashed = len(calls) == 1
+
+        class P:
+            returncode = 1 if crashed else 0
+            stdout = "collecting ..." if crashed else "20 passed in 4.00s"
+            stderr = (f"{noise}\nTraceback (most recent call last):\n"
+                      "MemoryError: worker killed" if crashed else "")
+        return P()
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    res = rss.run_sharded(2)
+    assert res["rc"] == 1
+    crash = res["shard_summaries"][0]
+    assert crash.startswith("shard 0 exited 1 without a pytest summary")
+    assert crash.endswith("MemoryError: worker killed")
+    assert len(crash) < 2200                 # the tail is bounded
+    assert res["failed"][0] == crash
+    assert res["shard_summaries"][1] == "20 passed in 4.00s"
+    assert res["summary"].startswith("20 passed")
 
 
 def test_scratch_dirs_cover_spark_local_dirs(monkeypatch):

@@ -74,6 +74,51 @@ def test_parallelize_small_widens_narrow_input(spark):
     assert parallelize_small(big).rdd.getNumPartitions() == cap
 
 
+class _StatsStub:
+    """Stands in for a DataFrame's ``_jdf`` py4j chain down to the
+    optimized plan's ``stats().sizeInBytes()``: returns ``size``, or
+    raises it when it is an exception."""
+
+    def __init__(self, size):
+        self._size = size
+        self._jdf = self
+
+    def queryExecution(self):
+        return self
+
+    def optimizedPlan(self):
+        return self
+
+    def stats(self):
+        return self
+
+    def sizeInBytes(self):
+        if isinstance(self._size, Exception):
+            raise self._size
+        return self._size
+
+
+@pytest.mark.parametrize("size", [2 ** 63 - 1, 0, -1,
+                                  RuntimeError("stats probe failed")],
+                         ids=["long_max", "zero", "negative", "raises"])
+def test_widen_width_degenerate_stats_return_target(size):
+    from vectordb_testbricks_spark.materialize import _widen_width
+    assert _widen_width(_StatsStub(size), 12) == 12
+
+
+def test_widen_width_real_plans(spark):
+    """A tiny plan floors at WIDEN_MIN_TASKS; an RDD-backed plan, whose
+    Catalyst estimate is the Long.MaxValue default, clamps to target."""
+    from vectordb_testbricks_spark.materialize import (
+        WIDEN_MIN_TASKS, _widen_width)
+    assert _widen_width(spark.range(10), 12) == WIDEN_MIN_TASKS
+    rdd_df = spark.sparkContext.parallelize([(1,), (2,)]).toDF(["x"])
+    size = int(rdd_df._jdf.queryExecution().optimizedPlan()
+               .stats().sizeInBytes())
+    assert size == 2 ** 63 - 1
+    assert _widen_width(rdd_df, 12) == 12
+
+
 def test_parallelize_small_is_noop_at_scale_width(spark):
     from vectordb_testbricks_spark.materialize import parallelize_small
     target = spark.sparkContext.defaultParallelism
@@ -163,29 +208,56 @@ def test_ntz_source_is_watermarkable_end_to_end(spark, tmp_path):
     assert spark.table("ntz_wm_out").count() >= 1
 
 
-def test_session_caches_evict_dead_app_entries(spark):
-    """ADVICE r12: module-level session caches (keyed by applicationId)
-    must not accumulate entries from stopped SparkContexts — on an
-    applicationId change, _session_key drops the previous application's
-    entries from every registered cache (last-app-wins), and the
-    catalog/dedup memos evict dead-app keys on insert."""
+def test_session_caches_evict_dead_app_entries(spark, tables):
+    """ADVICE r12: session caches must not keep a stopped SparkContext's
+    entries. Every cache goes through one application-scoped memo: the
+    first call under a new applicationId drops the previous
+    application's entries — entry-file caches, catalog handles and dedup
+    posting tables alike — while the new application's entries stay."""
+    from types import SimpleNamespace
+
     import __spark_entry__ as E
-    from vectordb_testbricks_spark.catalog import _evict_dead_apps
+    from conftest import SF_DIR
+    from vectordb_testbricks_spark import session
+    from vectordb_testbricks_spark.catalog import load_table
+    from vectordb_testbricks_spark.materialize import shared_persist
+    from vectordb_testbricks_spark.operators import dedup
 
-    app = spark.sparkContext.applicationId
-    # simulate a stale previous application
-    E._LAST_APP_ID[0] = "app-dead"
-    E._BM25_CACHE[("app-dead", "/x", None)] = ("stale",)
-    E._IVF_CACHE[("app-dead", "/x")] = "stale"
-    live_marker = (app, "/keep", None)
-    E._BM25_CACHE[live_marker] = ("live",)
-    assert E._session_key(spark) == app
-    assert not [k for k in E._BM25_CACHE if k[0] == "app-dead"]
-    assert not [k for k in E._IVF_CACHE if k[0] == "app-dead"]
-    assert E._BM25_CACHE.get(live_marker) == ("live",)   # live entries stay
-    del E._BM25_CACHE[live_marker]
+    region = load_table(spark, SF_DIR, "region")
+    assert load_table(spark, SF_DIR, "region") is region
+    n_docs = E._docs_count(spark, SF_DIR)
+    docs = tables["documents"].df.select("doc_id", "text").limit(20)
+    codes = shared_persist(dedup._token_codes(docs, "doc_id", "text", 3))
+    try:
+        posting = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
+                                             "jvm", n_docs=20)
+        held = list(session._memo.values())
+        assert any(v is region for v in held)
+        assert any(v is posting for v in held)
+        assert n_docs in held
 
-    # the helper the catalog/dedup memos use at insert time
-    cache = {("app-dead", 1): "x", (app, 2): "y"}
-    _evict_dead_apps(cache, app)
-    assert cache == {(app, 2): "y"}
+        nxt = SimpleNamespace(
+            sparkContext=SimpleNamespace(applicationId="app-next"))
+        live = session.session_memo(nxt, ("live",), object)
+        assert session._memo == {("live",): live}
+        assert session.session_memo(nxt, ("live",), object) is live
+    finally:
+        codes.unpersist()
+    # back on the real application: its handles are rebuilt, not reused
+    assert load_table(spark, SF_DIR, "region") is not region
+    assert ("live",) not in session._memo
+
+
+def test_session_memo_builds_outside_its_lock():
+    """build() runs without the memo lock held, so a build may itself
+    use the memo (the BM25 svec table builds from the memoized tf
+    table) and concurrent builds never serialize on each other."""
+    from types import SimpleNamespace
+
+    from vectordb_testbricks_spark.session import session_memo
+    app = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="app-nested"))
+    inner = session_memo(app, ("outer",), lambda: (
+        session_memo(app, ("inner",), lambda: 7) + 1))
+    assert inner == 8
+    assert session_memo(app, ("inner",), lambda: 0) == 7

@@ -538,6 +538,28 @@ def test_exact_duplicates_caps_mega_group(spark):
     assert g[0]["canonical_id"] == 0
 
 
+def test_lsh_candidate_regimes_agree_on_repeated_ids(spark):
+    """Both candidate regimes honour id_a < id_b: with a repeated id and
+    all-identical docs every doc lands in every bucket, so the
+    bucket-local emit (n_docs hint below BARRIER_MIN_ROWS) once paired
+    the repeated id with itself while the self-join never could."""
+    from vectordb_testbricks_spark.operators.dedup import (
+        lsh_candidate_pairs, minhash_signatures)
+    docs = spark.createDataFrame(
+        [(i, "same words in every doc") for i in (1, 2, 2, 3)],
+        "doc_id long, text string")
+    sigs = minhash_signatures(docs, "doc_id", "text")
+
+    def pairs(df):
+        rows = [(r["id_a"], r["id_b"]) for r in df.collect()]
+        assert all(a < b for a, b in rows), rows
+        return set(rows)
+
+    local = pairs(lsh_candidate_pairs(sigs, "doc_id", n_docs=20))
+    joined = pairs(lsh_candidate_pairs(sigs, "doc_id"))
+    assert local == joined == {(1, 2), (1, 3), (2, 3)}
+
+
 def test_simhash_identical_docs_hamming_zero(spark):
     from vectordb_testbricks_spark.operators.dedup import simhash_near_dups
     rows = [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"),

@@ -54,6 +54,16 @@ COST_HINTS = {
 }
 
 
+#: Characters of a crashed shard's stderr tail kept in its summary entry.
+STDERR_TAIL = 2000
+
+#: A pytest -q summary line: "1 failed, 10 passed in 5.00s",
+#: "no tests ran in 0.01s".
+_SUMMARY_RE = re.compile(
+    r"\b(passed|failed|errors?|skipped|deselected|no tests ran)\b.*"
+    r" in [\d.]+s")
+
+
 def _shard_files(n_shards: int) -> list[list[str]]:
     files = sorted(glob.glob(os.path.join(REPO, "tests", "test_*.py")))
     rel = [os.path.relpath(f, REPO) for f in files]
@@ -76,8 +86,8 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
     extra_args = extra_args or []
     t0 = time.time()
     shards = _shard_files(n_shards)
-    procs = []
     outs: list[str] = [""] * len(shards)
+    errs: list[str] = [""] * len(shards)
 
     def run_one(i: int, files: list[str]) -> None:
         p = subprocess.run(
@@ -86,6 +96,7 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
             cwd=REPO, capture_output=True, text=True,
             env=env if env is not None else os.environ.copy())
         outs[i] = p.stdout or ""
+        errs[i] = p.stderr or ""
         procs[i] = p.returncode
 
     threads = []
@@ -99,10 +110,22 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
 
     passed = failed = errors = deselected = skipped = 0
     failed_tests: list[str] = []
+    crashed: list[str] = []
     shard_summaries: list[str] = []
-    for out in outs:
+    for i, (out, err) in enumerate(zip(outs, errs)):
         tail = [ln for ln in out.strip().splitlines() if ln]
         summary = tail[-1] if tail else ""
+        failed_tests += [ln.split(" - ")[0][:160] for ln in tail
+                         if ln.startswith(("FAILED", "ERROR"))]
+        if not _SUMMARY_RE.search(summary):
+            # the shard died before pytest summarized (import crash,
+            # killed JVM, OOM): keep its stderr tail as the reason
+            summary = (f"shard {i} exited {procs[i]} without a pytest "
+                       f"summary; stderr tail: "
+                       f"{err.strip()[-STDERR_TAIL:] or '(empty)'}")
+            crashed.append(summary)
+            shard_summaries.append(summary)
+            continue
         shard_summaries.append(summary)
         for kind, pat in (("passed", r"(\d+) passed"),
                           ("failed", r"(\d+) failed"),
@@ -122,13 +145,9 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
                     deselected += v
                 elif kind == "skipped":
                     skipped += v
-        failed_tests += [ln.split(" - ")[0][:160] for ln in tail
-                         if ln.startswith(("FAILED", "ERROR"))]
     seconds = time.time() - t0
-    rc = 0 if all(p == 0 for p in procs) else 1
-    # a shard that crashed before printing a summary must fail the gate
-    if any(not s for s in shard_summaries):
-        rc = rc or 1
+    # a shard that crashed before printing a summary fails the gate
+    rc = 0 if all(p == 0 for p in procs) and not crashed else 1
     bits = [f"{passed} passed"]
     if failed:
         bits.insert(0, f"{failed} failed")
@@ -140,7 +159,8 @@ def run_sharded(n_shards: int, extra_args: list[str] | None = None,
         bits.append(f"{deselected} deselected")
     summary = (", ".join(bits)
                + f" in {seconds:.2f}s ({len(shards)} shards)")
-    return {"rc": rc, "summary": summary, "failed": failed_tests[:8],
+    return {"rc": rc, "summary": summary,
+            "failed": (crashed + failed_tests)[:8],
             "seconds": round(seconds, 1),
             "shard_summaries": shard_summaries}
 

@@ -292,8 +292,8 @@ def build_sparse_inverted(base: DataFrame, map_col: str, id_col: str,
     (search.sparse_bucket_py), so a query prunes partition dirs from its
     literal keys before any IO.
 
-    ``impl`` picks the explode stage: ``"jvm"`` (default, env
-    ``SPARK_GRAFT_SPARSE_IMPL``) is the Column explode;
+    ``impl`` picks the explode stage: ``"jvm"`` (default) is the Column
+    explode;
     ``"arrow"`` is the Arrow-batched kernel
     (arrow_kernels.sparse_postings_arrow) — identical postings (asserted
     in tests), immune to the per-JVM HotSpot slow mode that hit this
@@ -305,7 +305,7 @@ def build_sparse_inverted(base: DataFrame, map_col: str, id_col: str,
         resolve_impl, sparse_postings_arrow)
     from vectordb_testbricks_spark.operators.search import (
         sparse_bucket_expr, sparse_postings)
-    impl = resolve_impl(impl, "SPARK_GRAFT_SPARSE_IMPL", "jvm", "sparse")
+    impl = resolve_impl(impl, "jvm", "sparse")
     if impl == "arrow":
         posts = sparse_postings_arrow(base, map_col, id_col)
     else:

@@ -34,13 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
-def resolve_impl(impl: str | None, env_var: str, default: str,
-                 label: str) -> str:
-    """Shared impl-switch resolution for the kernelized operators:
-    explicit arg wins, then the env var, then the operator's default;
-    anything but 'arrow'/'jvm' raises naming the operator."""
-    import os
-    impl = impl or os.environ.get(env_var, default)
+def resolve_impl(impl: str | None, default: str, label: str) -> str:
+    """Shared impl-switch resolution for the kernelized operators: the
+    explicit arg, else the operator's default; anything but
+    'arrow'/'jvm' raises naming the operator."""
+    impl = impl or default
     if impl not in ("arrow", "jvm"):
         raise ValueError(f"unknown {label} impl {impl!r} "
                          f"(expected 'arrow' or 'jvm')")
@@ -775,8 +773,7 @@ def knn_search_arrow(base, queries, vec_col: str, id_col: str,
     scoring + map-side partial top-k; the pre-filter compiles exactly
     like the JVM path and the final exact window IS the JVM path's
     (search._ranked). The query side is collected driver-side (tiny by
-    the broadcast contract). Selected via knn_search(impl="arrow") or
-    env SPARK_GRAFT_KNN_IMPL."""
+    the broadcast contract). Selected via knn_search(impl="arrow")."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 

@@ -34,6 +34,7 @@ from vectordb_testbricks_spark.functions.vector import cosine_sim
 from vectordb_testbricks_spark.materialize import (
     BARRIER_MIN_ROWS, barrier_if_large, materialize_barrier,
     parallelize_small, shared_persist)
+from vectordb_testbricks_spark.session import session_forget, session_memo
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime), the classic minhash modulus
 NUM_HASHES = 16
@@ -161,8 +162,10 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
       emitted BUCKET-LOCALLY — one groupBy(key) collects each bucket's
       sorted member ids, two chained generators stream the in-bucket
       pairs (posexplode picks id_a, explode over the ids tail picks
-      id_b; ids sorted ⇒ id_a < id_b by position, never a quadratic
-      per-bucket array in one value). This removes the self-join's
+      id_b; ids sorted ⇒ id_a <= id_b by position, never a quadratic
+      per-bucket array in one value; a repeated id would pair with
+      itself, so id_a < id_b is filtered exactly as the self-join
+      does). This removes the self-join's
       per-call broadcast hash-relation build and its second pass over
       the bucket relation: sf0.1 pipeline medians 1.28 s vs 1.63 s.
     * **no hint / at-scale** (the conservative default): the original
@@ -205,6 +208,7 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
                     F.explode(F.expr(
                         "slice(ids, _i + 2, size(ids) - _i - 1)"))
                     .alias("id_b"))
+                .filter(F.col("id_a") < F.col("id_b"))
                 .distinct())
     a = buckets.alias("a")
     b = buckets.alias("b")
@@ -257,7 +261,7 @@ def minhash_lsh_dedup(docs: DataFrame, id_col: str, text_col: str,
     cluster scale: persist to parquet instead).
 
     ``impl`` picks the codes+signature materialization:
-      * ``"arrow"`` (default, env ``SPARK_GRAFT_MINHASH_IMPL``) — the
+      * ``"arrow"`` (default) — the
         Arrow-batched numpy kernel (operators/arrow_kernels.py). One
         mapInPandas pass computes codes AND sigs; chosen as the default
         because the JVM expression path's interpreted-HOF eval chain is
@@ -275,8 +279,7 @@ def minhash_lsh_dedup(docs: DataFrame, id_col: str, text_col: str,
     self-join)."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
         minhash_codes_sigs, resolve_impl)
-    impl = resolve_impl(impl, "SPARK_GRAFT_MINHASH_IMPL", "arrow",
-                        "minhash")
+    impl = resolve_impl(impl, "arrow", "minhash")
     if impl == "arrow":
         # widen BEFORE the kernel: the Python work must spread across
         # all cores even when the input is a few-partition parquet scan
@@ -304,8 +307,8 @@ def simhash_signatures(docs: DataFrame, id_col: str, text_col: str,
     bit_j = [ Σ_tokens tf · sign_j(token) > 0 ] where sign_j(token) ∈ {-1, 1}
     comes from the affine hash family's parity. Per-doc array aggregate.
 
-    ``impl`` picks the materialization (``"arrow"`` default, env
-    ``SPARK_GRAFT_SIMHASH_IMPL``): the Arrow-batched numpy kernel
+    ``impl`` picks the materialization (``"arrow"`` default): the
+    Arrow-batched numpy kernel
     (arrow_kernels.simhash_arrow — bit-identical signatures, asserted by
     identity tests and the DuckDB oracle). The JVM Column path below is
     the in-engine twin; its per-doc tf expression
@@ -314,8 +317,7 @@ def simhash_signatures(docs: DataFrame, id_col: str, text_col: str,
     per-JVM slow mode the MinHash kernel escaped (r12, guide §4.2)."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
         resolve_impl, simhash_arrow)
-    impl = resolve_impl(impl, "SPARK_GRAFT_SIMHASH_IMPL", "arrow",
-                        "simhash")
+    impl = resolve_impl(impl, "arrow", "simhash")
     if impl == "arrow":
         return simhash_arrow(
             parallelize_small(docs.select(id_col, text_col)),
@@ -426,38 +428,34 @@ NGRAM_BLACKLIST_MAX = 2_000_000
 #: kernel unwidened.
 PIGEONHOLE_MIN_ROWS = 100_000
 
-#: Session-lifetime memo of code-order posting tables, keyed by
-#: (applicationId, semanticHash of the codes plan, threshold, max_df,
-#: impl). The posting table IS the persisted inverted index ("steady-
-#: state searches reuse it" — ngram_candidate_pairs docstring), and the
-#: rarity order achieves that reuse automatically through CacheManager
-#: plan equality. The CODE order could not (r12, measured): its Arrow
-#: kernel closes over a fresh ``SparkContext.broadcast`` per call, so
-#: two calls' ``mapInArrow`` plans are never plan-equal — every steady-
-#: state search re-ran the whole posting build (and, through AQE's
-#: concurrent self-join legs racing the cold cache, ran it TWICE), and
-#: every call leaked one more InMemoryRelation. Memoizing the DataFrame
-#: handle restores the intended one-build-per-corpus behavior; no rows
-#: are memoized — the handle's cache is filled (and refilled after any
-#: unpersist) from the parquet-backed lineage like every other persisted
-#: intermediate. semanticHash keys on the CODES PLAN, so a different
-#: corpus/analyzer/session can never alias. Entries from dead
-#: applicationIds are evicted on the next insert (ADVICE r12).
+#: Code-order posting tables are memoized per application
+#: (session.session_memo), keyed by (semanticHash of the codes plan,
+#: threshold, max_df, impl). The posting table IS the persisted inverted
+#: index ("steady-state searches reuse it" — ngram_candidate_pairs
+#: docstring), and the rarity order achieves that reuse automatically
+#: through CacheManager plan equality. The CODE order could not (r12,
+#: measured): its Arrow kernel closes over a fresh
+#: ``SparkContext.broadcast`` per call, so two calls' ``mapInArrow`` plans
+#: are never plan-equal — every steady-state search re-ran the whole
+#: posting build (and, through AQE's concurrent self-join legs racing the
+#: cold cache, ran it TWICE), and every call leaked one more
+#: InMemoryRelation. Memoizing the DataFrame handle restores the intended
+#: one-build-per-corpus behavior; no rows are memoized — the handle's
+#: cache is filled (and refilled after any unpersist) from the
+#: parquet-backed lineage like every other persisted intermediate.
+#: semanticHash keys on the CODES PLAN, so a different corpus/analyzer can
+#: never alias. The over-max_df blacklist (a sorted list of codes) is
+#: memoized the same way: it is a property of the corpus' code sets —
+#: index-build metadata, not a query result — and recomputing it was one
+#: full explode+aggregate driver action per steady-state search.
 #:
 #: IMMUTABLE-INPUT CONTRACT (ADVICE r12): a plan's semanticHash does not
 #: see file contents, so the memo assumes the codes relation's
 #: underlying storage never changes within one session. Every current
 #: caller builds codes over immutable fixtures or fresh temp dirs; code
-#: that rewrites an input path in-place must ``drop_posting_memo`` first
-#: (the manager's mutable collections use versioned storage and never
-#: route through these memos).
-_POSTING_MEMO: dict[tuple, DataFrame] = {}
-
-#: Same lifetime/keying for the over-max_df blacklist (a sorted list of
-#: codes): it is a property of the corpus' code sets — index-build
-#: metadata, not a query result — and recomputing it was one full
-#: explode+aggregate driver action per steady-state search.
-_BLACKLIST_MEMO: dict[tuple, list] = {}
+#: that rewrites an input path in-place must ``session_forget`` the
+#: posting first (the manager's mutable collections use versioned storage
+#: and never route through this memo).
 
 
 def _codes_plan_key(codes: DataFrame) -> int | None:
@@ -470,13 +468,13 @@ def _codes_plan_key(codes: DataFrame) -> int | None:
         return None
 
 
-def drop_posting_memo(df: DataFrame) -> None:
-    """Forget memo entries resolving to ``df`` — callers that explicitly
-    unpersist a staged posting table (the two-phase 100M path) must also
-    evict it here, or a later call would be handed a cold, unpersisted
-    handle instead of rebuilding a persisted one."""
-    for k in [k for k, v in _POSTING_MEMO.items() if v is df]:
-        del _POSTING_MEMO[k]
+def _plan_memo(codes: DataFrame, plan_key: int | None, key: tuple,
+               build):
+    """``build()`` memoized per application on ``key`` plus the codes
+    plan; built afresh when the plan probe failed (``plan_key`` None)."""
+    if plan_key is None:
+        return build()
+    return session_memo(codes.sparkSession, (*key, plan_key), build)
 
 
 def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
@@ -555,7 +553,25 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     (arrow_kernels.prefix_postings_arrow); ``"jvm"`` is the in-engine
     twin (broadcast anti-join + per-doc window), kept for identity
     tests and pure-JVM deployments. NULL codes never post on either
-    path (the rarity build drops them at its df join)."""
+    path (the rarity build drops them at its df join).
+
+    Memoized per application on the codes plan (see the memo note
+    above): a steady-state search over an already-built inverted index
+    gets the SAME persisted posting handle back — the Arrow build's
+    per-call broadcast defeats CacheManager plan equality, so without
+    the memo every search re-ran the index build."""
+    codes = shared_persist(codes)
+    plan_key = _codes_plan_key(codes)
+    return _plan_memo(
+        codes, plan_key, ("posting", threshold, max_df, impl),
+        lambda: _build_code_order_postings(codes, id_col, threshold,
+                                           max_df, impl, n_docs, plan_key))
+
+
+def _build_code_order_postings(codes: DataFrame, id_col: str,
+                               threshold: float, max_df: int, impl: str,
+                               n_docs: int | None,
+                               plan_key: int | None) -> DataFrame:
     # materialization barrier BEFORE the blacklist pass: the codes cache
     # is usually cold here (this is the pipeline's first action), and
     # letting a 165M-key hash aggregation fuse into the cache-build
@@ -565,18 +581,6 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     # With a caller-supplied n_docs hint BELOW the barrier threshold the
     # count is skipped — fusing the agg into a <=60k-row cache build is
     # harmless and the count job is pure fixture tax (VERDICT r10 #4).
-    codes = shared_persist(codes)
-    plan_key = _codes_plan_key(codes)
-    app_id = codes.sparkSession.sparkContext.applicationId
-    memo_key = ((app_id, plan_key, threshold, max_df, impl)
-                if plan_key is not None else None)
-    if memo_key is not None and memo_key in _POSTING_MEMO:
-        # steady-state search over an already-built inverted index: the
-        # memoized handle carries the persisted posting relation (see
-        # _POSTING_MEMO — the Arrow build's per-call broadcast defeats
-        # CacheManager plan equality, so without this every search
-        # re-ran the index build)
-        return _POSTING_MEMO[memo_key]
     if n_docs is None:
         n_docs = codes.count()
     elif n_docs >= BARRIER_MIN_ROWS:
@@ -600,14 +604,9 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     # blacklist memo (r12): the over-max_df code set is index-build
     # metadata over the SAME codes relation every steady-state search —
     # computing it was one explode+aggregate driver action per call
-    bl_key = (app_id, plan_key, max_df) if plan_key is not None else None
-    blacklist = _BLACKLIST_MEMO.get(bl_key) if bl_key is not None else None
-    if blacklist is None:
-        blacklist = _compute_blacklist(codes, ex, max_df, impl, n_docs)
-        if bl_key is not None:
-            from vectordb_testbricks_spark.catalog import _evict_dead_apps
-            _evict_dead_apps(_BLACKLIST_MEMO, app_id)
-            _BLACKLIST_MEMO[bl_key] = blacklist
+    blacklist = _plan_memo(
+        codes, plan_key, ("blacklist", max_df),
+        lambda: _compute_blacklist(codes, ex, max_df, impl, n_docs))
     if impl == "arrow":
         from vectordb_testbricks_spark.operators.arrow_kernels import (
             prefix_postings_arrow)
@@ -616,12 +615,7 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
         # more in worker round-trips than the kernel computes
         src = (parallelize_small(codes) if n_docs >= PIGEONHOLE_MIN_ROWS
                else codes)
-        posting = prefix_postings_arrow(src, id_col, threshold, blacklist)
-        if memo_key is not None:
-            from vectordb_testbricks_spark.catalog import _evict_dead_apps
-            _evict_dead_apps(_POSTING_MEMO, app_id)
-            _POSTING_MEMO[memo_key] = posting
-        return posting
+        return prefix_postings_arrow(src, id_col, threshold, blacklist)
     from pyspark.sql import Window
     from pyspark.sql import types as T
     spark = codes.sparkSession
@@ -634,15 +628,10 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
             T.StructType([T.StructField("code", T.LongType(), False)]))
         sh = sh.join(F.broadcast(bl), "code", "left_anti")
     w = Window.partitionBy(id_col).orderBy("code")
-    posting = (sh.withColumn("pos", F.row_number().over(w) - 1)
-               .filter(F.col("pos") <
-                       F.floor(F.lit(1.0 - threshold) * F.col("sz")) + 1)
-               .select(id_col, "sz", "pos", "code"))
-    if memo_key is not None:
-        from vectordb_testbricks_spark.catalog import _evict_dead_apps
-        _evict_dead_apps(_POSTING_MEMO, app_id)
-        _POSTING_MEMO[memo_key] = posting
-    return posting
+    return (sh.withColumn("pos", F.row_number().over(w) - 1)
+            .filter(F.col("pos") <
+                    F.floor(F.lit(1.0 - threshold) * F.col("sz")) + 1)
+            .select(id_col, "sz", "pos", "code"))
 
 
 def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
@@ -794,7 +783,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     shingle strings cost ~3× in shuffle codes and key comparison).
 
     ``impl`` picks the shingle-code materialization — ``"jvm"``
-    (default, env ``SPARK_GRAFT_NGRAM_IMPL``) is the Column HOF path;
+    (default) is the Column HOF path;
     ``"arrow"`` reuses the MinHash Arrow kernel's codes output
     (bit-identical; the kernel is the JIT-slow-mode escape the 1M/10M
     scale entries take, BASELINE.md r08).
@@ -815,7 +804,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     dd_ngram_jaccard oracle entry's shape)."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
         minhash_codes_sigs, resolve_impl)
-    impl = resolve_impl(impl, "SPARK_GRAFT_NGRAM_IMPL", "jvm", "ngram")
+    impl = resolve_impl(impl, "jvm", "ngram")
     if posting_impl is not None and posting_impl not in ("arrow", "jvm"):
         raise ValueError(f"unknown ngram posting impl {posting_impl!r} "
                          f"(expected 'arrow' or 'jvm')")
@@ -873,7 +862,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
             cached.unpersist()
             # the posting memo must not hand a later call this now-cold
             # handle — evict so the next search rebuilds a persisted one
-            drop_posting_memo(cached)
+            session_forget(cached)
         # prod the driver GC so the cleaner drops the now-unreferenced
         # phase-1 shuffle dependencies before phase 2 starts writing
         # (same double-GC settle pattern as bench's scale loop)

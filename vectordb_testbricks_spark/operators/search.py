@@ -129,7 +129,7 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
     partition key just widens.
 
     ``impl`` picks the scoring + map-side partial top-k path: ``"jvm"``
-    (default, env ``SPARK_GRAFT_KNN_IMPL``) is the Column HOF expression
+    (default) is the Column HOF expression
     path below; ``"arrow"`` routes the non-grouping path through the
     numpy kernel (arrow_kernels.knn_search_arrow — bit-identical rows,
     scores, and ranks; the scoring HOF chain is the same interpreted
@@ -140,7 +140,7 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
         knn_search_arrow, resolve_impl)
     gb = ([group_by] if isinstance(group_by, str)
           else list(group_by) if group_by else [])
-    impl = resolve_impl(impl, "SPARK_GRAFT_KNN_IMPL", "jvm", "knn")
+    impl = resolve_impl(impl, "jvm", "knn")
     if impl == "arrow" and not gb:
         return knn_search_arrow(base, queries, vec_col, id_col,
                                 metric=metric, k=k, flt=flt,

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the application-scoped
+memo that holds every piece of prepared per-session state.
 
 Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same config block is
 what we would ship to a multi-executor cluster (AQE on, sane shuffle
@@ -8,8 +9,12 @@ parallelism, Arrow enabled for the few pandas interchange points).
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 
 def get_spark(app_name: str = "vectordb_testbricks_spark",
@@ -80,3 +85,48 @@ def get_spark(app_name: str = "vectordb_testbricks_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# ------------------------------------------------- application-scoped memo
+#
+# Prepared per-session state (catalog handles, BM25 sidecars, IVF indexes,
+# pooled plans, posting tables) lives in ONE dict scoped to the current
+# SparkContext's applicationId. The first call under a new applicationId
+# clears it, so a stopped session's DataFrames and broadcasts can never be
+# served to (or pinned by) its successor. The lock guards only the dict and
+# the app switch, never ``build()``: builds run Spark jobs, and concurrent
+# callers (workload.py's threaded closed loops) must not serialize on them.
+
+_memo_lock = threading.Lock()
+_memo_app: list = [None]
+_memo: dict = {}
+
+
+def session_memo(spark: SparkSession, key: Hashable,
+                 build: Callable[[], _T]) -> _T:
+    """``build()``'s value, computed once per (application, ``key``).
+
+    Two concurrent misses may both build; the first stored value wins and
+    is returned to both. A value built while the application changed
+    underneath is returned but not stored."""
+    app = spark.sparkContext.applicationId
+    with _memo_lock:
+        if _memo_app[0] != app:
+            _memo.clear()
+            _memo_app[0] = app
+        if key in _memo:
+            return _memo[key]
+    value = build()
+    with _memo_lock:
+        if _memo_app[0] != app:
+            return value
+        return _memo.setdefault(key, value)
+
+
+def session_forget(value: object) -> None:
+    """Drop every memo entry whose value is ``value`` (identity) — for
+    callers that explicitly unpersist a memoized handle, so a later call
+    rebuilds a persisted one instead of receiving the cold handle."""
+    with _memo_lock:
+        for k in [k for k, v in _memo.items() if v is value]:
+            del _memo[k]
