@@ -540,11 +540,11 @@ _SQL_HAM = ("list_sum(list_transform(list_zip(CAST(e.embedding AS DOUBLE[]), q.q
             " x -> CASE WHEN (x[1] >= 0) <> (x[2] >= 0) THEN 1 ELSE 0 END))")
 
 
-def _knn(spark, sf_dir, metric, flt=None, with_label=False, impl=None):
+def _knn(spark, sf_dir, metric, flt=None, with_label=False):
     from vectordb_testbricks_spark.operators.search import knn_search
     emb, q = _emb_queries(spark, sf_dir)
     hits = knn_search(emb, q, "embedding", "vec_id", metric=metric, k=10,
-                      flt=flt, impl=impl,
+                      flt=flt,
                       output_fields=["label"] if with_label else None)
     lbl = ["label"] if with_label else []
     return hits.select("query_id", "vec_id", *lbl,
@@ -680,16 +680,15 @@ def dd_minhash_1m(spark, sf_dir, n=1_000_000, uniq=900_000):
     0..(n−uniq), so the expected pair set is the n−uniq planted
     duplicates; every stage is kernel / bucket-join work, no driver
     collection. Since r09 the corpus AND the codes+signature stage are
-    Arrow/numpy (impl="arrow", _gen_docs_arrow) — the r08-localized
-    HotSpot slow mode lived in this entry's JVM HOF stage, and the
-    kernel path is immune by construction. Not a registry entry (no
-    1M-row DuckDB oracle in the per-round budget) — correctness of the
-    pipeline itself is oracled by dd_minhash (which runs the same
-    impl="arrow" default) and the Arrow==JVM identity tests."""
+    Arrow/numpy (_gen_docs_arrow, arrow_kernels.minhash_codes_sigs) —
+    the r08-localized HotSpot slow mode lived in this entry's JVM HOF
+    stage, and the kernel is immune by construction. Not a registry
+    entry (no 1M-row DuckDB oracle in the per-round budget) —
+    correctness of the pipeline itself is oracled by dd_minhash (the
+    same kernels) and the Arrow==JVM identity tests."""
     from vectordb_testbricks_spark.operators.dedup import minhash_lsh_dedup
     docs = _gen_docs_arrow(spark, n, uniq)
-    return minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.7,
-                             impl="arrow")
+    return minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.7)
 
 
 def dd_minhash_10m(spark, sf_dir):
@@ -777,8 +776,8 @@ def dd_ngram_1m(spark, sf_dir, n=1_000_000, uniq=900_000):
     # the candidate-volume difference is negligible.
     # The dd_ngram_jaccard oracle pins BOTH orders at sf0.01.
     return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.7,
-                               max_df=50, min_shared=1, impl="arrow",
-                               order="code", n_docs=n, stage_dir=stage_dir)
+                               max_df=50, min_shared=1, order="code",
+                               n_docs=n, stage_dir=stage_dir)
 
 
 def dd_ngram_10m(spark, sf_dir):
@@ -808,7 +807,7 @@ def dd_ngram_100m(spark, sf_dir):
     return dd_ngram_1m(spark, sf_dir, n=100_000_000, uniq=90_000_000)
 
 
-def v_knn_1m(spark, sf_dir, n=1_000_000, impl="arrow"):
+def v_knn_1m(spark, sf_dir, n=1_000_000):
     """Bench-only scale evidence for the dense brute-force kNN kernel
     (r10, operators/arrow_kernels.knn_search_arrow): exact COSINE
     top-100 for nq=4 corpus queries over 1M seeded 16-dim vectors —
@@ -825,7 +824,8 @@ def v_knn_1m(spark, sf_dir, n=1_000_000, impl="arrow"):
     tests/test_arrow_kernels.py::TestKnnKernel."""
     from vectordb_testbricks_spark.datagen import gen_vector_fast
     from vectordb_testbricks_spark.materialize import shared_persist
-    from vectordb_testbricks_spark.operators.search import knn_search
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        knn_search_arrow)
     base = shared_persist(spark.range(n).select(
         F.col("id").alias("pk"),
         gen_vector_fast(11, F.col("id"), 16).alias("embedding")))
@@ -836,8 +836,8 @@ def v_knn_1m(spark, sf_dir, n=1_000_000, impl="arrow"):
             to_double_array(gen_vector_fast(11, F.col("id"), 16))
             .alias("qvec"))
         qs = one if qs is None else qs.unionByName(one)
-    return knn_search(base, qs, "embedding", "pk", metric="COSINE",
-                      k=100, impl=impl)
+    return knn_search_arrow(base, qs, "embedding", "pk", metric="COSINE",
+                            k=100)
 
 
 def v_ivf_1m(spark, sf_dir):
@@ -1026,11 +1026,11 @@ def v_sparse_1m(spark, sf_dir, n=1_000_000, vocab=30_000, nnz=16):
     reclaimed after the 40-row result materializes.
 
     Since r09 the corpus maps are generated by a numpy kernel and the
-    postings build runs impl="arrow" (arrow_kernels.sparse_postings_arrow)
-    — this entry's postings-build stage was the second r08-localized
-    victim of the sticky per-JVM HotSpot slow mode on interpreted-HOF
-    chains (transform/map_from_arrays/explode at 16× CPU in ~50% of
-    JVMs); the Arrow path is immune by construction and bit-identical
+    postings build runs arrow_kernels.sparse_postings_arrow — this
+    entry's postings-build stage was the second r08-localized victim of
+    the sticky per-JVM HotSpot slow mode on interpreted-HOF chains
+    (transform/map_from_arrays/explode at 16× CPU in ~50% of JVMs); the
+    Arrow path is immune by construction and bit-identical
     (tests/test_arrow_kernels.py). The persisted layout, pruning plan
     and search path are unchanged."""
     import shutil
@@ -1072,8 +1072,7 @@ def v_sparse_1m(spark, sf_dir, n=1_000_000, vocab=30_000, nnz=16):
             corpus = tmp + "/corpus"
             base.write.mode("overwrite").parquet(corpus)
             base = spark.read.parquet(corpus)
-        model = build_sparse_inverted(base, "svec", "pk", n_buckets=64,
-                                      impl="arrow")
+        model = build_sparse_inverted(base, "svec", "pk", n_buckets=64)
         path = tmp + "/idx"
         write_sparse_inverted(model, path)
         reloaded = read_sparse_inverted(spark, path)
@@ -1128,14 +1127,15 @@ def v_knn_metrics(spark, sf_dir):
     driver's 50-row correctness budget). Scores cast to double so the
     integer HAMMING popcount unions cleanly with the float metrics.
 
-    ``A_<metric>`` branches (r10): the same four searches routed through
-    the dense Arrow kernel (knn_search(impl="arrow") —
-    operators/arrow_kernels.knn_scores_arrow), oracled against the SAME
-    per-metric SQL. The kernel claims bit-for-bit twin-ness with the JVM
-    expression path; putting it behind the driver's DuckDB hash every
+    ``A_<metric>`` branches (r10): the same four searches through the
+    dense Arrow kernel (arrow_kernels.knn_search_arrow), oracled against
+    the SAME per-metric SQL. The kernel claims bit-for-bit twin-ness with
+    the JVM expression path; putting it behind the DuckDB oracle hash every
     round is the dd_minhash discipline (an identity suite proves the
     twin once; the oracle row keeps proving it against an independent
     engine per round)."""
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        knn_search_arrow)
     out = None
     hits = None
     for m in ("L2", "IP", "COSINE", "HAMMING"):
@@ -1154,11 +1154,13 @@ def v_knn_metrics(spark, sf_dir):
                         "label",
                         F.col("score").cast("double").alias("score"), "rank"))
         out = part if out is None else out.unionByName(part)
-        apart = (_knn(spark, sf_dir, m, with_label=True, impl="arrow")
+        emb, q = _emb_queries(spark, sf_dir)
+        apart = (knn_search_arrow(emb, q, "embedding", "vec_id", metric=m,
+                                  k=10, output_fields=["label"])
                  .select(F.lit("A_" + m).alias("metric"), "query_id",
                          "vec_id", "label",
-                         F.col("score").cast("double").alias("score"),
-                         "rank"))
+                         F.round("score", 4).cast("double").alias("score"),
+                         F.col("rank").cast("bigint").alias("rank")))
         out = out.unionByName(apart)
     # V12 fold ('SHAPE' branch): the reference's result-shape checks
     # (workload.py:155-162 — nq hit lists, each exactly k rows, ids unique
@@ -3114,9 +3116,9 @@ def dd_ngram_jaccard(spark, sf_dir):
         _token_codes, jaccard_pairs, ngram_candidate_pairs)
     base = _doubled_docs(spark, sf_dir)
     nd = _doubled_docs_count(spark, sf_dir)
-    # both modes share ONE JVM codes cache (ngram_jaccard_pairs' default
-    # impl); the 'code' mode still routes its posting KERNEL + pigeonhole
-    # blacklist through Arrow
+    # both modes share ONE JVM codes cache (ngram_jaccard_pairs' kernel
+    # below BARRIER_MIN_ROWS); the 'code' mode builds its postings with
+    # the Arrow posting kernel
     codes = shared_persist(_token_codes(base, "doc_id", "text",
                                         shingle_n=3))
     # r12 (guide §1.2 step 1): candidates per order, ONE mode-tagged
@@ -3126,8 +3128,7 @@ def dd_ngram_jaccard(spark, sf_dir):
     # former per-mode verifies by construction (same candidates per mode,
     # same per-pair verification, same threshold and rounding)
     cands = None
-    for mode, kw in (("rarity", {"impl": "jvm"}),
-                     ("code", {"order": "code", "impl": "arrow"})):
+    for mode, kw in (("rarity", {}), ("code", {"order": "code"})):
         c = ngram_candidate_pairs(codes, "doc_id", 0.7, max_df=50,
                                   min_shared=2, prefix=True, n_docs=nd,
                                   **kw)

@@ -30,6 +30,32 @@ def _collect_map(df, key, *cols):
     return {r[key]: tuple(r[c] for c in cols) for r in df.collect()}
 
 
+def _pair_rows(df):
+    return sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect())
+
+
+def _minhash_jvm_reference(docs, threshold=0.7):
+    """minhash_lsh_dedup rebuilt from the JVM twins of its kernels."""
+    from vectordb_testbricks_spark.operators.dedup import (
+        _token_codes, jaccard_pairs, lsh_candidate_pairs,
+        signatures_from_codes)
+    codes = _token_codes(docs, "doc_id", "text", 3)
+    cands = lsh_candidate_pairs(signatures_from_codes(codes, "doc_id"),
+                                "doc_id")
+    return (jaccard_pairs(codes, cands, "doc_id")
+            .filter(F.col("jaccard") >= threshold))
+
+
+def _jaccard_both(codes, pairs):
+    """(Arrow rows, JVM rows) of the Jaccard verify over ``pairs``."""
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        jaccard_arrow)
+    from vectordb_testbricks_spark.operators.dedup import (
+        _attach_codes, jaccard_pairs)
+    return (_pair_rows(jaccard_arrow(_attach_codes(codes, pairs, "doc_id"))),
+            _pair_rows(jaccard_pairs(codes, pairs, "doc_id")))
+
+
 class TestMinhashKernel:
     # shingle_n=0 pins the ADVICE r09 twin fix: both paths must switch
     # on truthiness (raw tokens), not `is None`
@@ -67,58 +93,61 @@ class TestMinhashKernel:
         assert jvm == ar
 
     def test_pipeline_pairs_identical(self, spark, tables):
-        """End-to-end minhash_lsh_dedup: impl='arrow' and impl='jvm'
-        return the same verified pair set with the same Jaccard."""
+        """End-to-end minhash_lsh_dedup (Arrow codes, signatures and
+        verify) returns the same verified pair set with the same Jaccard
+        as the pipeline rebuilt from the JVM twins."""
         from vectordb_testbricks_spark.operators.dedup import (
             minhash_lsh_dedup)
         docs = tables["documents"].df.select("doc_id", "text")
         doubled = docs.unionByName(docs.select(
             (F.col("doc_id") + 500000).alias("doc_id"), "text"))
-
-        def pairs(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in minhash_lsh_dedup(
-                    doubled, "doc_id", "text", threshold=0.7,
-                    impl=impl).collect())
-
-        a, j = pairs("arrow"), pairs("jvm")
-        assert a == j
+        a = _pair_rows(minhash_lsh_dedup(doubled, "doc_id", "text",
+                                         threshold=0.7))
+        assert a == _pair_rows(_minhash_jvm_reference(doubled))
         assert len(a) > 0
-
-    def test_unknown_impl_raises(self, spark, edge_docs):
-        from vectordb_testbricks_spark.operators.dedup import (
-            minhash_lsh_dedup)
-        with pytest.raises(ValueError, match="unknown minhash impl"):
-            minhash_lsh_dedup(edge_docs, "doc_id", "text",
-                              impl="vectorized").collect()
 
 
 class TestNgramKernelPath:
     def test_ngram_pairs_identical(self, spark, tables):
+        """The n_docs hint picks the n-gram codes + verify kernels (Arrow
+        iff n_docs >= BARRIER_MIN_ROWS). A hint that lies in either
+        direction must not change the pair set, under both prefix
+        orders, over a corpus the fixtures never produce: NULL and empty
+        text, single-token docs and a group of identical docs."""
+        from vectordb_testbricks_spark.materialize import BARRIER_MIN_ROWS
         from vectordb_testbricks_spark.operators.dedup import (
             ngram_jaccard_pairs)
         docs = tables["documents"].df.select("doc_id", "text")
-        doubled = docs.unionByName(docs.select(
+        extra = spark.createDataFrame(
+            [(3_000_001, None), (3_000_002, None), (3_000_003, ""),
+             (3_000_004, ""), (3_000_005, "solo"), (3_000_006, "solo"),
+             (3_000_007, "alone")]
+            + [(3_000_100 + i, "every copy of this text is the same")
+               for i in range(6)],
+            "doc_id bigint, text string")
+        corpus = (docs.unionByName(docs.select(
             (F.col("doc_id") + 500000).alias("doc_id"), "text"))
+            .unionByName(extra))
 
-        def pairs(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-                for r in ngram_jaccard_pairs(
-                    doubled, "doc_id", "text", n=3, threshold=0.7,
-                    max_df=50, min_shared=2, impl=impl).collect())
+        def run(order, n_docs):
+            df = ngram_jaccard_pairs(corpus, "doc_id", "text", n=3,
+                                     threshold=0.7, max_df=50,
+                                     min_shared=2, order=order,
+                                     n_docs=n_docs)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return _pair_rows(df), plan
 
-        a, j = pairs("arrow"), pairs("jvm")
-        assert a == j
-        assert len(a) > 0
-
-    def test_unknown_impl_raises(self, spark, edge_docs):
-        from vectordb_testbricks_spark.operators.dedup import (
-            ngram_jaccard_pairs)
-        with pytest.raises(ValueError, match="unknown ngram impl"):
-            ngram_jaccard_pairs(edge_docs, "doc_id", "text",
-                                impl="simd").collect()
+        for order in ("rarity", "code"):
+            small, small_plan = run(order, 20)
+            large, large_plan = run(order, BARRIER_MIN_ROWS)
+            assert small == large, order
+            assert small and all(a < b for a, b, _ in small), order
+            # the hint-chosen kernels are the only MapInPandas nodes
+            assert "MapInPandas" not in small_plan, order
+            assert "MapInPandas" in large_plan, order
+            if order == "rarity":
+                # no Python stage at all below the boundary
+                assert "MapInArrow" not in small_plan
 
 
 class TestPrefixPostingsKernel:
@@ -132,11 +161,11 @@ class TestPrefixPostingsKernel:
                                             monkeypatch):
         from vectordb_testbricks_spark.operators import dedup
         from vectordb_testbricks_spark.operators.dedup import (
-            _code_order_postings, _token_codes)
+            _code_order_postings, _code_order_postings_jvm, _token_codes)
         # force the pigeonhole candidate branch (normally a >=100k-doc
         # scale escape) so the fixture-scale identity covers it;
         # max_df=3 makes the blacklist it produces NON-empty
-        monkeypatch.setattr(dedup, "PIGEONHOLE_MIN_ROWS", 0)
+        monkeypatch.setattr(dedup, "BARRIER_MIN_ROWS", 0)
         docs = tables["documents"].df.select("doc_id", "text")
         doubled = docs.unionByName(docs.select(
             (F.col("doc_id") + 500000).alias("doc_id"), "text"))
@@ -146,10 +175,10 @@ class TestPrefixPostingsKernel:
             edge_docs.select((F.col("doc_id") + 2000000).alias("doc_id"),
                              "text"))
         codes = _token_codes(corpus, "doc_id", "text", 3)
-        jvm = sorted(map(tuple, _code_order_postings(
-            codes, "doc_id", 0.7, max_df, "jvm").collect()))
+        jvm = sorted(map(tuple, _code_order_postings_jvm(
+            codes, "doc_id", 0.7, max_df).collect()))
         ar = sorted(map(tuple, _code_order_postings(
-            codes, "doc_id", 0.7, max_df, "arrow").collect()))
+            codes, "doc_id", 0.7, max_df).collect()))
         assert jvm == ar
         assert len(jvm) > 0
 
@@ -167,10 +196,9 @@ class TestPrefixPostingsKernel:
                     doubled, "doc_id", "text", n=3, threshold=0.7,
                     max_df=50, **kw).collect())
 
-        rarity = pairs(order="rarity", impl="jvm")
-        code_a = pairs(order="code", impl="arrow")
-        code_j = pairs(order="code", impl="jvm")
-        assert rarity == code_a == code_j
+        rarity = pairs(order="rarity")
+        code = pairs(order="code")
+        assert rarity == code
         assert len(rarity) > 0
 
     def test_local_heavy_codes_pigeonhole_superset(self, spark):
@@ -253,15 +281,6 @@ class TestPrefixPostingsKernel:
             ngram_jaccard_pairs(edge_docs, "doc_id", "text",
                                 order="df").collect()
 
-    def test_unknown_impl_raises(self, spark, edge_docs):
-        # ADVICE r10: a typo like 'Arrow' used to silently take the JVM
-        # path and silently disable the pigeonhole scale escape
-        from vectordb_testbricks_spark.operators.dedup import (
-            ngram_candidate_pairs, _token_codes)
-        codes = _token_codes(edge_docs, "doc_id", "text", 3)
-        with pytest.raises(ValueError, match="unknown impl"):
-            ngram_candidate_pairs(codes, "doc_id", 0.7, impl="Arrow")
-
 
 SPARSE_ROWS = [
     (1, {0: 1.0, 5: 2.5, 9: -0.75}),
@@ -326,13 +345,15 @@ class TestSparsePostingsKernel:
             sparse_postings_arrow(base, "svec", "pk")
 
     def test_build_search_identity(self, spark):
-        """build_sparse_inverted impl='arrow' serves identical results to
-        impl='jvm' AND to the brute-force map scan (the declared
-        semantics)."""
+        """build_sparse_inverted (Arrow postings) serves identical results
+        to an index over the JVM twin's postings AND to the brute-force
+        map scan (the declared semantics)."""
+        import dataclasses
+
         from vectordb_testbricks_spark.operators.ann_index import (
-            build_sparse_inverted, sparse_inverted_search)
+            SPARSE_BUCKET_COL, build_sparse_inverted, sparse_inverted_search)
         from vectordb_testbricks_spark.operators.search import (
-            sparse_search_many)
+            sparse_bucket_expr, sparse_postings, sparse_search_many)
         base = spark.createDataFrame(
             [(i, {int(k): float((i + k) % 7 + 1)
                   for k in range((i * 3) % 5 + 1)})
@@ -345,18 +366,12 @@ class TestSparsePostingsKernel:
                            r["rank"]) for r in df.collect())
 
         brute = hits(sparse_search_many(base, qmaps, "svec", "pk", k=10))
-        for impl in ("arrow", "jvm"):
-            model = build_sparse_inverted(base, "svec", "pk",
-                                          n_buckets=8, impl=impl)
-            assert hits(sparse_inverted_search(model, qmaps, k=10)) == brute
-
-    def test_unknown_impl_raises(self, spark):
-        from vectordb_testbricks_spark.operators.ann_index import (
-            build_sparse_inverted)
-        base = spark.createDataFrame([(1, {0: 1.0})],
-                                     "pk bigint, svec map<int,double>")
-        with pytest.raises(ValueError, match="unknown sparse impl"):
-            build_sparse_inverted(base, "svec", "pk", impl="gpu")
+        model = build_sparse_inverted(base, "svec", "pk", n_buckets=8)
+        jvm_model = dataclasses.replace(
+            model, postings=sparse_postings(base, "svec", "pk").withColumn(
+                SPARSE_BUCKET_COL, sparse_bucket_expr("key", 8)))
+        for m in (model, jvm_model):
+            assert hits(sparse_inverted_search(m, qmaps, k=10)) == brute
 
 
 class TestScaleCorpusGen:
@@ -382,46 +397,30 @@ class TestScaleCorpusGen:
 
 class TestJaccardKernel:
     def test_jaccard_identical_to_jvm(self, spark, tables):
-        """jaccard_pairs impl='arrow' == impl='jvm' on real candidate
-        pairs over the doubled fixture corpus (exact doubles at J=1 plus
-        partial overlaps from LSH collisions)."""
+        """jaccard_arrow == jaccard_pairs on real candidate pairs over the
+        doubled fixture corpus (exact doubles at J=1 plus partial
+        overlaps from LSH collisions)."""
         from vectordb_testbricks_spark.operators.dedup import (
-            _token_codes, jaccard_pairs, lsh_candidate_pairs,
-            signatures_from_codes)
+            _token_codes, lsh_candidate_pairs, signatures_from_codes)
         docs = tables["documents"].df.select("doc_id", "text")
         doubled = docs.unionByName(docs.select(
             (F.col("doc_id") + 500000).alias("doc_id"), "text"))
         codes = _token_codes(doubled, "doc_id", "text", 3)
         cands = lsh_candidate_pairs(
             signatures_from_codes(codes, "doc_id"), "doc_id")
-
-        def rows(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], round(r["jaccard"], 12))
-                for r in jaccard_pairs(codes, cands, "doc_id",
-                                       impl=impl).collect())
-
-        a, j = rows("arrow"), rows("jvm")
+        a, j = _jaccard_both(codes, cands)
         assert a == j and len(a) > 0
 
     def test_jaccard_null_and_partial(self, spark):
-        """NULL code arrays yield NULL jaccard in both impls; partial
+        """NULL code arrays yield NULL jaccard in both kernels; partial
         overlaps agree to the exact double."""
-        from vectordb_testbricks_spark.operators.dedup import jaccard_pairs
         codes = spark.createDataFrame(
             [(1, [10, 20, 30]), (2, [20, 30, 40, 50]), (3, None),
              (4, [10, 20, 30])],
             "doc_id bigint, codes array<bigint>")
         pairs = spark.createDataFrame(
             [(1, 2), (1, 3), (1, 4)], "id_a bigint, id_b bigint")
-
-        def rows(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in jaccard_pairs(codes, pairs, "doc_id",
-                                       impl=impl).collect())
-
-        a, j = rows("arrow"), rows("jvm")
+        a, j = _jaccard_both(codes, pairs)
         assert a == j
         got = {(x, y): v for x, y, v in a}
         assert got[(1, 2)] == 2 / 5.0
@@ -433,39 +432,28 @@ class TestJaccardKernel:
         pandas as float64 NaN arrays — the kernel must normalize them
         so a NULL element null-safe-matches a NULL element, exactly
         like Spark's array_intersect (two NULL-text docs pair at
-        jaccard 1.0 on both impls)."""
+        jaccard 1.0 on both kernels)."""
         from vectordb_testbricks_spark.operators.dedup import (
-            jaccard_pairs, minhash_lsh_dedup)
+            minhash_lsh_dedup)
         codes = spark.createDataFrame(
             [(1, [None]), (2, [None]), (3, [None, 7]), (4, [7, 9])],
             "doc_id bigint, codes array<bigint>")
         pairs = spark.createDataFrame(
             [(1, 2), (1, 3), (3, 4)], "id_a bigint, id_b bigint")
-
-        def rows(impl):
-            return sorted(
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in jaccard_pairs(codes, pairs, "doc_id",
-                                       impl=impl).collect())
-
-        a, j = rows("arrow"), rows("jvm")
+        a, j = _jaccard_both(codes, pairs)
         assert a == j
         got = {(x, y): v for x, y, v in a}
         assert got[(1, 2)] == 1.0          # [NULL] vs [NULL]
         assert got[(1, 3)] == 0.5          # [NULL] vs [NULL, 7]
         assert got[(3, 4)] == 1 / 3.0      # [NULL,7] vs [7,9]
-        # end-to-end: two NULL-text docs must pair identically on the
-        # DEFAULT (arrow) path and the jvm path
+        # end-to-end: two NULL-text docs must pair identically in the
+        # Arrow pipeline and in its JVM-twin reference
         docs = spark.createDataFrame(
             [(1, None), (2, None), (3, "real text here")],
             "doc_id bigint, text string")
-        for impl in ("arrow", "jvm"):
-            got_pairs = sorted(
-                (r["id_a"], r["id_b"])
-                for r in minhash_lsh_dedup(docs, "doc_id", "text",
-                                           threshold=0.7,
-                                           impl=impl).collect())
-            assert got_pairs == [(1, 2)], impl
+        for df in (minhash_lsh_dedup(docs, "doc_id", "text", threshold=0.7),
+                   _minhash_jvm_reference(docs)):
+            assert [r[:2] for r in _pair_rows(df)] == [(1, 2)]
 
 
 class TestKnnKernel:
@@ -476,15 +464,16 @@ class TestKnnKernel:
     def test_fixture_identical_all_metrics(self, spark, tables, metric):
         from vectordb_testbricks_spark.functions.vector import (
             to_double_array)
+        from vectordb_testbricks_spark.operators.arrow_kernels import (
+            knn_search_arrow)
         from vectordb_testbricks_spark.operators.search import knn_search
         emb = tables["embeddings"].df
         q = (emb.filter(F.col("vec_id").isin([0, 5, 9]))
              .select(F.col("vec_id").alias("query_id"),
                      to_double_array(F.col("embedding")).alias("qvec")))
-        jvm = knn_search(emb, q, "embedding", "vec_id", metric=metric,
-                         k=7, impl="jvm")
-        ar = knn_search(emb, q, "embedding", "vec_id", metric=metric,
-                        k=7, impl="arrow")
+        jvm = knn_search(emb, q, "embedding", "vec_id", metric=metric, k=7)
+        ar = knn_search_arrow(emb, q, "embedding", "vec_id", metric=metric,
+                              k=7)
         assert sorted(map(tuple, jvm.collect())) == \
             sorted(map(tuple, ar.collect()))
 
@@ -506,40 +495,34 @@ class TestKnnKernel:
             rows, "pk bigint, v array<double>, tag string")
         q = spark.createDataFrame([(0, [1.0, 0.0, 0.0])],
                                   "query_id int, qvec array<double>")
+        from vectordb_testbricks_spark.operators.arrow_kernels import (
+            knn_search_arrow)
         from vectordb_testbricks_spark.operators.search import knn_search
         for metric in ("COSINE", "L2", "IP", "HAMMING"):
             for flt in (None, 'tag == "a"'):
                 jvm = knn_search(base, q, "v", "pk", metric=metric, k=8,
-                                 flt=flt, output_fields=["tag"],
-                                 impl="jvm").collect()
-                ar = knn_search(base, q, "v", "pk", metric=metric, k=8,
-                                flt=flt, output_fields=["tag"],
-                                impl="arrow").collect()
+                                 flt=flt, output_fields=["tag"]).collect()
+                ar = knn_search_arrow(base, q, "v", "pk", metric=metric,
+                                      k=8, flt=flt,
+                                      output_fields=["tag"]).collect()
                 def key(rs):
                     return [(r["query_id"], r["pk"], r["tag"], r["rank"],
                              repr(r["score"])) for r in rs]
                 assert sorted(key(jvm)) == sorted(key(ar)), (metric, flt)
 
     def test_null_query_vector_and_null_query_element(self, spark, tables):
+        from vectordb_testbricks_spark.operators.arrow_kernels import (
+            knn_search_arrow)
         from vectordb_testbricks_spark.operators.search import knn_search
         emb = tables["embeddings"].df
         dim = len(emb.select("embedding").first()[0])
         q = spark.createDataFrame(
             [(0, None), (1, [1.0] * (dim - 1) + [None])],
             f"query_id int, qvec array<double>")
-        for impl in ("jvm", "arrow"):
-            got = knn_search(emb, q, "embedding", "vec_id",
-                             metric="COSINE", k=3, impl=impl).collect()
-            assert got == [], impl
-
-    def test_unknown_impl_raises(self, spark, tables):
-        from vectordb_testbricks_spark.operators.search import knn_search
-        emb = tables["embeddings"].df
-        with pytest.raises(ValueError, match="knn"):
-            knn_search(emb, emb.limit(1).select(
-                F.lit(0).alias("query_id"),
-                F.col("embedding").alias("qvec")),
-                "embedding", "vec_id", impl="bogus")
+        for search in (knn_search, knn_search_arrow):
+            got = search(emb, q, "embedding", "vec_id",
+                         metric="COSINE", k=3).collect()
+            assert got == [], search.__name__
 
 
 class TestSimhashKernel:
@@ -549,32 +532,40 @@ class TestSimhashKernel:
         the JVM expression path — incl. bits=64 (bit 63 wraps into the
         long's sign bit on both paths), NULL and token-less texts -> 0."""
         from vectordb_testbricks_spark.operators.dedup import (
-            simhash_signatures)
+            _simhash_signatures_jvm, simhash_signatures)
         jvm = _collect_map(
-            simhash_signatures(edge_docs, "doc_id", "text", bits,
-                               impl="jvm"), "doc_id", "simhash")
+            _simhash_signatures_jvm(edge_docs, "doc_id", "text", bits),
+            "doc_id", "simhash")
         ar = _collect_map(
-            simhash_signatures(edge_docs, "doc_id", "text", bits,
-                               impl="arrow"), "doc_id", "simhash")
+            simhash_signatures(edge_docs, "doc_id", "text", bits),
+            "doc_id", "simhash")
         assert jvm == ar
 
     def test_fixture_corpus_identical(self, spark, tables):
         from vectordb_testbricks_spark.operators.dedup import (
-            simhash_signatures)
+            _simhash_signatures_jvm, simhash_signatures)
         docs = tables["documents"].df.select("doc_id", "text")
         jvm = _collect_map(
-            simhash_signatures(docs, "doc_id", "text", impl="jvm"),
+            _simhash_signatures_jvm(docs, "doc_id", "text"),
             "doc_id", "simhash")
         ar = _collect_map(
-            simhash_signatures(docs, "doc_id", "text", impl="arrow"),
+            simhash_signatures(docs, "doc_id", "text"),
             "doc_id", "simhash")
         assert jvm == ar
 
-    def test_unknown_impl_raises(self, spark, edge_docs):
+    @pytest.mark.parametrize("bits", [0, 65, 80])
+    def test_bits_outside_one_long_raise(self, spark, edge_docs, bits):
+        """A signature wider than 64 bits cannot pack into a long: the
+        kernel's shift gives 0 for every bit past 63 (bits=64, 65 and 80
+        all produced the same value), and near-dup band offsets >= 64
+        wrap in shiftrightunsigned, voiding the pigeonhole recall
+        guarantee. Both operators must refuse such widths up front."""
         from vectordb_testbricks_spark.operators.dedup import (
-            simhash_signatures)
-        with pytest.raises(ValueError, match="simhash"):
-            simhash_signatures(edge_docs, "doc_id", "text", impl="simd")
+            simhash_near_dups, simhash_signatures)
+        with pytest.raises(ValueError, match="1..64"):
+            simhash_signatures(edge_docs, "doc_id", "text", bits)
+        with pytest.raises(ValueError, match="1..64"):
+            simhash_near_dups(edge_docs, "doc_id", "text", bits=bits)
 
 
 class TestCodeOrderPostingMemo:
@@ -591,13 +582,12 @@ class TestCodeOrderPostingMemo:
             dedup._token_codes(edge_docs, "doc_id", "text", 3))
         try:
             p1 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            "arrow", n_docs=9)
+                                            n_docs=9)
             p2 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            "arrow", n_docs=9)
+                                            n_docs=9)
             assert p1 is p2
             # rows still correct on the memoized handle (vs the JVM twin)
-            jvm = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                             "jvm", n_docs=9)
+            jvm = dedup._code_order_postings_jvm(codes, "doc_id", 0.7, 50)
             key = lambda rs: sorted(
                 (r["doc_id"], r["sz"], r["pos"], r["code"])
                 for r in rs.collect())
@@ -605,15 +595,14 @@ class TestCodeOrderPostingMemo:
             # explicit eviction protects the two-phase unpersist path
             session_forget(p1)
             p3 = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                            "arrow", n_docs=9)
+                                            n_docs=9)
             assert p3 is not p1
         finally:
             codes.unpersist()
-            # evict the MEMO VALUES (ADVICE r12: dropping `codes` was a
+            # evict the MEMO VALUE (ADVICE r12: dropping `codes` was a
             # no-op — it is never a memo value — and leaked p3's handle
             # over the now-unpersisted codes cache into later tests);
             # locals() guards the early-assertion-failure path where p3
-            # or jvm were never bound
-            for h in (locals().get("p3"), locals().get("jvm")):
-                if h is not None:
-                    session_forget(h)
+            # was never bound
+            if locals().get("p3") is not None:
+                session_forget(p3)

@@ -230,7 +230,7 @@ def test_session_caches_evict_dead_app_entries(spark, tables):
     codes = shared_persist(dedup._token_codes(docs, "doc_id", "text", 3))
     try:
         posting = dedup._code_order_postings(codes, "doc_id", 0.7, 50,
-                                             "jvm", n_docs=20)
+                                             n_docs=20)
         held = list(session._memo.values())
         assert any(v is region for v in held)
         assert any(v is posting for v in held)

@@ -1,8 +1,10 @@
 """Measure the sustained top_k=15000 serving point: JVM expression
-scoring vs the dense Arrow kernel (knn_search impl), both through the
-prepared-plan pool that BENCH_SUSTAINED600.json uses.
+scoring (search.knn_search) vs the dense Arrow kernel
+(arrow_kernels.knn_search_arrow), both as a prepared-plan pool like the
+one BENCH_SUSTAINED600.json uses. This is the crossover that keeps two
+KNN kernels: serving stays on the JVM path.
 
-Two probes per impl, interleaved A/B/A/B so warm-up drift cannot favor
+Two probes per kernel, interleaved A/B/A/B so warm-up drift cannot favor
 one side:
   * sequential: N warm collects of rotating pooled plans -> p50/p95
   * closed-loop: run_sustained_searches workers=10 for --loop-sec -> QPS
@@ -19,14 +21,18 @@ import sys
 import time
 
 
-def build_pool(spark, entrymod, base, impl: str, nplans: int):
+def build_pool(spark, entrymod, base, kernel: str, nplans: int):
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        knn_search_arrow)
     from vectordb_testbricks_spark.operators.search import (
         prepare_search_pool)
-    return prepare_search_pool(
-        base,
-        [entrymod._topk15000_query(spark, (i * 997) % 120_000)
-         for i in range(nplans)],
-        "embedding", "pk", metric="COSINE", k=15000, impl=impl)
+    sides = [entrymod._topk15000_query(spark, (i * 997) % 120_000)
+             for i in range(nplans)]
+    if kernel == "jvm":
+        return prepare_search_pool(base, sides, "embedding", "pk",
+                                   metric="COSINE", k=15000)
+    return [knn_search_arrow(base, q, "embedding", "pk", metric="COSINE",
+                             k=15000) for q in sides]
 
 
 def main() -> None:
@@ -45,39 +51,39 @@ def main() -> None:
     base = entrymod._topk15000_base(spark).persist()
     base.count()
 
-    pools = {impl: build_pool(spark, entrymod, base, impl, args.nplans)
-             for impl in ("jvm", "arrow")}
-    for impl in ("jvm", "arrow"):
-        pools[impl][0].count()          # warm both plan paths, untimed
+    pools = {kernel: build_pool(spark, entrymod, base, kernel, args.nplans)
+             for kernel in ("jvm", "arrow")}
+    for kernel in ("jvm", "arrow"):
+        pools[kernel][0].count()          # warm both plan paths, untimed
 
     out: dict = {"k": 15000, "corpus": 120_000, "nplans": args.nplans}
 
-    # sequential latency, two interleaved blocks per impl
+    # sequential latency, two interleaved blocks per kernel
     seq: dict[str, list[float]] = {"jvm": [], "arrow": []}
     half = max(args.seq // 2, 1)
     for _block in range(2):
-        for impl in ("jvm", "arrow"):
-            pool = pools[impl]
+        for kernel in ("jvm", "arrow"):
+            pool = pools[kernel]
             for i in range(half):
                 t0 = time.perf_counter()
                 pool[i % len(pool)].collect()
-                seq[impl].append(time.perf_counter() - t0)
-    for impl, lats in seq.items():
+                seq[kernel].append(time.perf_counter() - t0)
+    for kernel, lats in seq.items():
         ls = sorted(lats)
-        out[f"seq_{impl}"] = {
+        out[f"seq_{kernel}"] = {
             "n": len(ls),
             "p50": round(statistics.median(ls), 4),
             "p95": round(ls[min(len(ls) - 1, int(0.95 * len(ls)))], 4),
             "min": round(ls[0], 4), "max": round(ls[-1], 4),
         }
 
-    # closed-loop QPS, one block per impl (interleave order jvm, arrow,
+    # closed-loop QPS, one block per kernel (interleave order jvm, arrow,
     # then a second short jvm block to expose drift)
     if args.loop_sec > 0:
-        for tag, impl, dur in (("loop_jvm", "jvm", args.loop_sec),
+        for tag, kernel, dur in (("loop_jvm", "jvm", args.loop_sec),
                                ("loop_arrow", "arrow", args.loop_sec),
                                ("loop_jvm2", "jvm", args.loop_sec / 2)):
-            pool = pools[impl]
+            pool = pools[kernel]
 
             def task(widx: int, seq_i: int, pool=pool):
                 return pool[(widx * 7 + seq_i * 13) % len(pool)]

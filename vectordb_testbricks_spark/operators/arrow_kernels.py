@@ -1,23 +1,49 @@
-"""Arrow-batched numpy kernels for the two HOF-heavy hot paths.
+"""Arrow-batched numpy kernels and the one list of where each one runs.
 
 Round-8 instrumentation localized a sticky per-JVM HotSpot pathology to
-exactly one stage per scale entry: the interpreted higher-order-function
-eval chain (ArrayTransform/aggregate) of (a) the MinHash codes+signature
-materialization and (b) the sparse postings build ran at ~16x CPU in
-~50% of JVM launches — same stage id, identical plan, every other stage
-in the same JVM normal (BASELINE.md r08 section; refuted A/B probes
-included the decisive ``wholeStage=false`` floor run). These kernels
-re-express those two computations as ``mapInPandas`` numpy/hashlib code:
-Arrow-batched (never row-at-a-time Python UDFs), embarrassingly parallel
-(zero shuffles — the kernels are per-row work), and immune to JVM JIT
-state by construction.
+the interpreted higher-order-function eval chains (ArrayTransform/
+aggregate): the same stage, with an identical plan, ran at ~16x CPU in
+~50% of JVM launches (BASELINE.md r08, refuted A/B probes included).
+These kernels re-express those computations as ``mapInPandas`` /
+``mapInArrow`` numpy code: Arrow-batched (never row-at-a-time Python
+UDFs), per-row work with zero shuffles, and immune to JVM JIT state.
 
-Exactness contract: each kernel is a bit-for-bit twin of its JVM
-expression path (tokenize regex, md5-derived 60-bit codes mod
-P = 2^31-1, the affine hash family of dedup.hash_params, NULL/empty-text
-edge semantics) — asserted by identity tests in
-tests/test_arrow_kernels.py and, for the MinHash pipeline, by the
-driver's DuckDB oracle row (dd_minhash runs the Arrow path by default).
+Each kernel is a bit-for-bit twin of a JVM expression path. A JVM twin
+stays only where the identity tests (tests/test_arrow_kernels.py) use it
+as the reference, or where a measured crossover makes it the production
+kernel of one regime. No caller flag picks a kernel; each stage's regime
+is fixed here:
+
+* ``minhash_codes_sigs`` (twin: ``dedup._token_codes`` +
+  ``dedup.signatures_from_codes``) — always, in ``minhash_lsh_dedup``.
+  The r08 slow mode lived in this stage (~16x CPU).
+* ``simhash_arrow`` (twin: ``dedup._simhash_signatures_jvm``) — always,
+  in ``simhash_signatures``. The JVM tf expression is quadratic in doc
+  length and of the same expression class (r12).
+* ``sparse_postings_arrow`` (twin: ``search.sparse_postings``) — always,
+  in ``ann_index.build_sparse_inverted``. The second r08-localized
+  slow-mode stage.
+* ``prefix_postings_arrow`` (twin: ``dedup._code_order_postings_jvm``) —
+  always, for code-order postings. The rarity-order build it replaces
+  spilled ~55 GB at 10M docs.
+* ``local_heavy_codes_arrow`` (twin: the exact df aggregation) — the
+  code-order blacklist iff ``n_docs >= BARRIER_MIN_ROWS``. The full df
+  aggregation spilled 24 GB at 10M docs; at fixture scale it is cheaper
+  than a Python round trip.
+* ``jaccard_arrow`` (twin: ``dedup.jaccard_pairs``) — always in the
+  MinHash pipeline; in the n-gram pipeline iff ``n_docs >=
+  BARRIER_MIN_ROWS``, together with ``minhash_codes_sigs`` for the
+  n-gram codes (twin ``dedup._token_codes``). Measured crossover: at 10M
+  the JVM verify took 807 vs 364 CPU-s (r09), while on the 10k-doc
+  fixture the n-gram codes + verify run 1.72 s JVM vs 2.28 s Arrow
+  (OPTIMIZATION_r13). No hint means JVM: un-hinted callers are
+  fixture-sized (see ``materialize.BARRIER_MIN_ROWS``).
+* ``knn_search_arrow`` (twin: ``search.knn_search``) — chosen by function
+  name, because the crossover depends on the operating point, not on
+  row count. Batch scoring over large corpora calls it (``v_knn_1m``:
+  2.1 s JVM vs 1.1 s at 1M x 16, r10). Pooled serving at 120k x
+  k=15000 stays on ``knn_search`` (p50 0.264 s JVM vs 0.351 s, BASELINE.md
+  r10; ``tools/measure_knn_pool_impl.py`` re-measures it).
 
 Reference parity: the signatures these kernels produce feed the same
 banded-LSH dedup surface SURVEY.md S2 maps from the reference's
@@ -32,17 +58,6 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-
-
-def resolve_impl(impl: str | None, default: str, label: str) -> str:
-    """Shared impl-switch resolution for the kernelized operators: the
-    explicit arg, else the operator's default; anything but
-    'arrow'/'jvm' raises naming the operator."""
-    impl = impl or default
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(f"unknown {label} impl {impl!r} "
-                         f"(expected 'arrow' or 'jvm')")
-    return impl
 
 
 def _minhash_rows(texts, shingle_n, a_vec, b_vec, p):
@@ -225,17 +240,9 @@ def _simhash_rows(texts, a_vec, b_vec, p):
 def simhash_arrow(docs: DataFrame, id_col: str, text_col: str,
                   bits: int = 16) -> DataFrame:
     """(id, simhash) — the tf-weighted hyperplane SimHash as one
-    Arrow-batched kernel pass: twin of ``dedup.simhash_signatures``'s
-    JVM expression path (same tokenizer, md5-derived codes mod P, affine
-    parity family, integer bit pack — identity asserted in
-    tests/test_arrow_kernels.py).
-
-    Why (r12, guide §4.2): the JVM path's per-doc tf computation is a
-    ``transform(array_distinct(toks), u -> size(filter(toks, x = u)))``
-    — an interpreted-HOF chain quadratic in doc length and the same
-    expression class as the r08 per-JVM slow mode the MinHash kernel
-    escaped; this kernel replaces it with one vectorized numpy pass
-    (Counter tf, ``add.reduceat`` per-bit sums)."""
+    Arrow-batched kernel pass (Counter tf, ``add.reduceat`` per-bit
+    sums): twin of ``dedup._simhash_signatures_jvm`` (same tokenizer,
+    md5-derived codes mod P, affine parity family, integer bit pack)."""
     from vectordb_testbricks_spark.operators.dedup import P, hash_params
 
     params = hash_params(bits)
@@ -277,10 +284,7 @@ def jaccard_arrow(joined: DataFrame, a_col: str = "ca",
     so elements normalize to int/None before the set ops (float64 holds
     the <2^31 codes exactly; int() restores identity with null-free
     int64 batches). The division is one IEEE double op — bit-identical
-    across engines. This is the third kernel of the r08 slow-mode
-    escape: at 10M docs the verify stage's interpreted
-    collection-expression eval showed the same graded per-JVM CPU
-    inflation (807 vs 364 CPU-s, identical plan)."""
+    across engines."""
     out_fields = [f for f in joined.schema.fields
                   if f.name not in (a_col, b_col)]
     out_schema = T.StructType(
@@ -628,10 +632,9 @@ def knn_scores_arrow(base, queries_rows, vec_col: str, id_col: str,
                      metric: str, k: int,
                      output_fields: list[str] | None = None):
     """Per-partition partial top-k of brute-force dense scoring as an
-    Arrow-batched numpy kernel — the fourth kernel of the slow-mode
-    family: the JVM scoring path is an interpreted ``aggregate``/
-    ``zip_with`` HOF chain (HOFs never enter whole-stage codegen), the
-    same expression class the r08-localized HotSpot slow mode lived in.
+    Arrow-batched numpy kernel, replacing the JVM path's interpreted
+    ``aggregate``/``zip_with`` HOF chain (HOFs never enter whole-stage
+    codegen).
 
     Emits (query_id, id, [output_fields...], score) with AT MOST
     nq x k rows per input partition — the same map-side bound the
@@ -773,7 +776,8 @@ def knn_search_arrow(base, queries, vec_col: str, id_col: str,
     scoring + map-side partial top-k; the pre-filter compiles exactly
     like the JVM path and the final exact window IS the JVM path's
     (search._ranked). The query side is collected driver-side (tiny by
-    the broadcast contract). Selected via knn_search(impl="arrow")."""
+    the broadcast contract). Batch callers call it by name (see the
+    kernel list in the module docstring)."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 

@@ -18,10 +18,11 @@ reduced mod P = 2^31 - 1 with affine hash family a·x + b (mod P), constants
 generated by a fixed formula — the DuckDB oracle reproduces every signature
 bit-for-bit (see functions/text.py).
 
-Scale notes: signatures are per-doc array expressions (whole-stage codegen,
-no 16× row blowup); LSH bucket joins shuffle only (band, key) pairs; the
-shingle inverted index caps posting lists at ``max_df`` to kill the
-quadratic head (standard practice — common shingles carry no dedup signal).
+Scale notes: signatures are per-doc work (Arrow kernels — arrow_kernels
+lists which stage runs which kernel; no 16× row blowup); LSH bucket joins
+shuffle only (band, key) pairs; the shingle inverted index caps posting
+lists at ``max_df`` to kill the quadratic head (standard practice —
+common shingles carry no dedup signal).
 """
 
 from __future__ import annotations
@@ -219,109 +220,91 @@ def lsh_candidate_pairs(sigs: DataFrame, id_col: str,
             .distinct())
 
 
-def jaccard_pairs(codes: DataFrame, pairs: DataFrame, id_col: str,
-                  impl: str = "jvm") -> DataFrame:
-    """Exact Jaccard over code sets for given (id_a, id_b) pairs.
-
-    ``impl="arrow"`` computes the set intersection/union in the Arrow
-    kernel (arrow_kernels.jaccard_arrow) after the JVM joins attach both
-    code arrays — at 10M docs the verify stage's interpreted
-    collection-expression eval showed the same graded per-JVM CPU
-    inflation the signature stage did (BASELINE.md r08/r09), and the
-    join/shuffle machinery it keeps on the JVM is codegen-stable."""
+def _attach_codes(codes: DataFrame, pairs: DataFrame,
+                  id_col: str) -> DataFrame:
+    """(id_a, id_b, [extra pair columns...], ca, cb): both docs' code
+    arrays joined onto each candidate pair — the input of either Jaccard
+    verify (:func:`jaccard_pairs`, arrow_kernels.jaccard_arrow)."""
     ca = codes.select(F.col(id_col).alias("id_a"), F.col("codes").alias("ca"))
     cb = codes.select(F.col(id_col).alias("id_b"), F.col("codes").alias("cb"))
-    joined = pairs.join(ca, "id_a").join(cb, "id_b")
     # any extra pair columns (e.g. a mode tag on a multi-order candidate
     # union) ride through the verify unchanged — one verify pass can then
     # serve several candidate generators (r12, guide §1.2 step 1)
     extra = [f.name for f in pairs.schema.fields
              if f.name not in ("id_a", "id_b")]
-    if impl == "arrow":
-        from vectordb_testbricks_spark.operators.arrow_kernels import (
-            jaccard_arrow)
-        return jaccard_arrow(
-            joined.select("id_a", "id_b", *extra, "ca", "cb"))
+    return (pairs.join(ca, "id_a").join(cb, "id_b")
+            .select("id_a", "id_b", *extra, "ca", "cb"))
+
+
+def jaccard_pairs(codes: DataFrame, pairs: DataFrame,
+                  id_col: str) -> DataFrame:
+    """Exact Jaccard over code sets for given (id_a, id_b) pairs — the JVM
+    verify. The at-scale pipelines verify through the Arrow twin
+    (``jaccard_arrow(_attach_codes(...))``, see arrow_kernels)."""
+    joined = _attach_codes(codes, pairs, id_col)
     inter = F.size(F.array_intersect("ca", "cb")).cast("double")
     union = F.size(F.array_union("ca", "cb")).cast("double")
-    return joined.select("id_a", "id_b", *extra,
+    return joined.select(*joined.columns[:-2],
                          (inter / union).alias("jaccard"))
 
 
 def minhash_lsh_dedup(docs: DataFrame, id_col: str, text_col: str,
                       threshold: float = 0.7,
                       shingle_n: int | None = 3,
-                      impl: str | None = None,
                       n_docs: int | None = None) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: candidate pairs with verified
     Jaccard ≥ threshold. Returns (id_a, id_b, jaccard).
 
-    The (id, codes) table feeds both the signature and the verification
-    stage; it is computed once and cached for the pipeline's lifetime (at
-    cluster scale: persist to parquet instead).
-
-    ``impl`` picks the codes+signature materialization:
-      * ``"arrow"`` (default) — the
-        Arrow-batched numpy kernel (operators/arrow_kernels.py). One
-        mapInPandas pass computes codes AND sigs; chosen as the default
-        because the JVM expression path's interpreted-HOF eval chain is
-        subject to a sticky per-JVM HotSpot slow mode at ~16x CPU
-        (BASELINE.md r08) — the kernel is immune by construction.
-      * ``"jvm"`` — the original pure-Column expression path, kept as
-        the in-engine twin (bit-for-bit identity asserted in
-        tests/test_arrow_kernels.py; the DuckDB oracle reproduces the
-        same signatures either way).
-    Both paths share the LSH banding, candidate join and exact-Jaccard
-    verification unchanged — impl changes HOW one stage materializes,
-    never what any stage returns. ``n_docs`` is the optional cheap row
-    hint forwarded to :func:`lsh_candidate_pairs` (small hinted corpora
-    take the bucket-local candidate emit; no hint keeps the scale-safe
-    self-join)."""
+    The (id, codes, sig) table comes from one Arrow kernel pass
+    (arrow_kernels.minhash_codes_sigs); it feeds both the LSH banding and
+    the verification stage and is cached for the pipeline's lifetime (at
+    cluster scale: persist to parquet instead). ``n_docs`` is the
+    optional cheap row hint forwarded to :func:`lsh_candidate_pairs`
+    (small hinted corpora take the bucket-local candidate emit; no hint
+    keeps the scale-safe self-join)."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        minhash_codes_sigs, resolve_impl)
-    impl = resolve_impl(impl, "arrow", "minhash")
-    if impl == "arrow":
-        # widen BEFORE the kernel: the Python work must spread across
-        # all cores even when the input is a few-partition parquet scan
-        cs = shared_persist(
-            minhash_codes_sigs(parallelize_small(
-                docs.select(id_col, text_col)), id_col,
-                text_col, NUM_HASHES, shingle_n))
-        codes = cs.select(id_col, "codes")
-        sigs = cs.select(id_col, "sig")
-    else:
-        codes = shared_persist(_token_codes(docs, id_col, text_col,
-                                            shingle_n))
-        sigs = signatures_from_codes(codes, id_col)
-    cands = lsh_candidate_pairs(sigs, id_col, n_docs=n_docs)
-    return (jaccard_pairs(codes, cands, id_col, impl=impl)
+        jaccard_arrow, minhash_codes_sigs)
+    # widen BEFORE the kernel: the Python work must spread across all
+    # cores even when the input is a few-partition parquet scan
+    cs = shared_persist(
+        minhash_codes_sigs(parallelize_small(
+            docs.select(id_col, text_col)), id_col,
+            text_col, NUM_HASHES, shingle_n))
+    codes = cs.select(id_col, "codes")
+    cands = lsh_candidate_pairs(cs.select(id_col, "sig"), id_col,
+                                n_docs=n_docs)
+    return (jaccard_arrow(_attach_codes(codes, cands, id_col))
             .filter(F.col("jaccard") >= threshold))
 
 
 # ----------------------------------------------------------------- simhash
 
 def simhash_signatures(docs: DataFrame, id_col: str, text_col: str,
-                       bits: int = 16, impl: str | None = None) -> DataFrame:
-    """(id, simhash) — tf-weighted hyperplane simhash, `bits` wide.
+                       bits: int = 16) -> DataFrame:
+    """(id, simhash) — tf-weighted hyperplane simhash, `bits` wide
+    (1..64: the signature is one Java long).
 
     bit_j = [ Σ_tokens tf · sign_j(token) > 0 ] where sign_j(token) ∈ {-1, 1}
-    comes from the affine hash family's parity. Per-doc array aggregate.
-
-    ``impl`` picks the materialization (``"arrow"`` default): the
-    Arrow-batched numpy kernel
-    (arrow_kernels.simhash_arrow — bit-identical signatures, asserted by
-    identity tests and the DuckDB oracle). The JVM Column path below is
-    the in-engine twin; its per-doc tf expression
-    (transform(array_distinct) × filter) is an interpreted-HOF chain
-    quadratic in doc length — the same expression class as the r08
-    per-JVM slow mode the MinHash kernel escaped (r12, guide §4.2)."""
+    comes from the affine hash family's parity. Computed by the Arrow
+    kernel (arrow_kernels.simhash_arrow); :func:`_simhash_signatures_jvm`
+    is its bit-identical JVM twin."""
+    if not 1 <= bits <= 64:
+        # the signature is one long: a bit past 63 shifts out to 0 in the
+        # kernel and wraps in Java's shifts (the twin, near-dup bands)
+        raise ValueError(f"simhash bits must be in 1..64, got {bits}")
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        resolve_impl, simhash_arrow)
-    impl = resolve_impl(impl, "arrow", "simhash")
-    if impl == "arrow":
-        return simhash_arrow(
-            parallelize_small(docs.select(id_col, text_col)),
-            id_col, text_col, bits)
+        simhash_arrow)
+    return simhash_arrow(
+        parallelize_small(docs.select(id_col, text_col)),
+        id_col, text_col, bits)
+
+
+def _simhash_signatures_jvm(docs: DataFrame, id_col: str, text_col: str,
+                            bits: int = 16) -> DataFrame:
+    """The Column-expression twin of :func:`simhash_signatures` — the
+    identity tests' reference. Its per-doc tf expression
+    (transform(array_distinct) × filter) is an interpreted-HOF chain
+    quadratic in doc length, the r08 slow-mode class (r12, guide §4.2)."""
     params = hash_params(bits)
     # per-doc (code, tf) pairs as a row-local array expression — no explode /
     # double groupBy shuffle; tf scope is the document itself. Tokens come
@@ -372,6 +355,9 @@ def simhash_near_dups(docs: DataFrame, id_col: str, text_col: str,
     Cost is n_bands·n index rows and bucket-local joins; at 100-TB scale
     use bits=64 so buckets stay selective. Returns (id_a, id_b, hamming).
     """
+    # first: it validates ``bits`` — a band offset >= 64 would wrap in
+    # shiftrightunsigned and void the pigeonhole recall guarantee
+    sigs = simhash_signatures(docs, id_col, text_col, bits)
     if n_bands is None:
         n_bands = max_hamming + 1
     if n_bands > bits:
@@ -382,7 +368,6 @@ def simhash_near_dups(docs: DataFrame, id_col: str, text_col: str,
     base_w, extra = divmod(bits, n_bands)
     widths = [base_w + (1 if i < extra else 0) for i in range(n_bands)]
     offsets = [sum(widths[:i]) for i in range(n_bands)]
-    sigs = simhash_signatures(docs, id_col, text_col, bits)
     band_arr = F.array(*[
         F.struct(
             F.lit(i).alias("band"),
@@ -421,16 +406,9 @@ def simhash_near_dups(docs: DataFrame, id_col: str, text_col: str,
 #: point at the rarity order, whose df handling stays distributed.
 NGRAM_BLACKLIST_MAX = 2_000_000
 
-#: Below this many docs, the code-order build skips the pigeonhole
-#: candidate pass (the plain df aggregation is trivially cheap at small
-#: N — the pigeonhole exists to avoid a 100M+-row hash agg, not to tax
-#: fixtures with python worker round-trips) and feeds the posting
-#: kernel unwidened.
-PIGEONHOLE_MIN_ROWS = 100_000
-
 #: Code-order posting tables are memoized per application
 #: (session.session_memo), keyed by (semanticHash of the codes plan,
-#: threshold, max_df, impl). The posting table IS the persisted inverted
+#: threshold, max_df). The posting table IS the persisted inverted
 #: index ("steady-state searches reuse it" — ngram_candidate_pairs
 #: docstring), and the rarity order achieves that reuse automatically
 #: through CacheManager plan equality. The CODE order could not (r12,
@@ -478,7 +456,7 @@ def _plan_memo(codes: DataFrame, plan_key: int | None, key: tuple,
 
 
 def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
-                       impl: str, n_docs: int) -> list:
+                       n_docs: int) -> list:
     """The sorted over-``max_df`` code blacklist for the code-order
     posting build, by partition regime (see the regime comment in
     :func:`_code_order_postings`).
@@ -495,11 +473,11 @@ def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
     except Exception:                                   # noqa: BLE001
         nparts = None
     cand = None
-    # below PIGEONHOLE_MIN_ROWS the plain aggregation is trivially cheap
+    # below BARRIER_MIN_ROWS the plain aggregation is trivially cheap
     # and the pigeonhole pass would be pure python-roundtrip overhead —
     # the two-regime design is a SCALE escape, not a fixture tax
-    if (nparts is not None and nparts <= max_df and impl == "arrow"
-            and n_docs >= PIGEONHOLE_MIN_ROWS):
+    if (nparts is not None and nparts <= max_df
+            and n_docs >= BARRIER_MIN_ROWS):
         from vectordb_testbricks_spark.operators.arrow_kernels import (
             local_heavy_codes_arrow)
         min_local = max(2, math.ceil((max_df + 1) / nparts))
@@ -532,7 +510,7 @@ def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
 
 
 def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
-                         max_df: int, impl: str,
+                         max_df: int,
                          n_docs: int | None = None) -> DataFrame:
     """Prefix posting table ``(id, sz, pos, code)`` under the **code
     total order** — the shuffle-free build behind
@@ -549,11 +527,10 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     window sort — the two stages that spilled ~55 GB at 10M docs under
     the rarity order (BASELINE.md scaling model).
 
-    ``impl="arrow"`` builds postings in one Arrow pass
-    (arrow_kernels.prefix_postings_arrow); ``"jvm"`` is the in-engine
-    twin (broadcast anti-join + per-doc window), kept for identity
-    tests and pure-JVM deployments. NULL codes never post on either
-    path (the rarity build drops them at its df join).
+    The postings come from one Arrow pass
+    (arrow_kernels.prefix_postings_arrow); :func:`_code_order_postings_jvm`
+    is the identity tests' JVM twin. NULL codes never post (the rarity
+    build drops them at its df join).
 
     Memoized per application on the codes plan (see the memo note
     above): a steady-state search over an already-built inverted index
@@ -563,13 +540,13 @@ def _code_order_postings(codes: DataFrame, id_col: str, threshold: float,
     codes = shared_persist(codes)
     plan_key = _codes_plan_key(codes)
     return _plan_memo(
-        codes, plan_key, ("posting", threshold, max_df, impl),
+        codes, plan_key, ("posting", threshold, max_df),
         lambda: _build_code_order_postings(codes, id_col, threshold,
-                                           max_df, impl, n_docs, plan_key))
+                                           max_df, n_docs, plan_key))
 
 
 def _build_code_order_postings(codes: DataFrame, id_col: str,
-                               threshold: float, max_df: int, impl: str,
+                               threshold: float, max_df: int,
                                n_docs: int | None,
                                plan_key: int | None) -> DataFrame:
     # materialization barrier BEFORE the blacklist pass: the codes cache
@@ -606,27 +583,29 @@ def _build_code_order_postings(codes: DataFrame, id_col: str,
     # computing it was one explode+aggregate driver action per call
     blacklist = _plan_memo(
         codes, plan_key, ("blacklist", max_df),
-        lambda: _compute_blacklist(codes, ex, max_df, impl, n_docs))
-    if impl == "arrow":
-        from vectordb_testbricks_spark.operators.arrow_kernels import (
-            prefix_postings_arrow)
-        # widen only CPU-heavy inputs: at fixture scale, fanning a few
-        # thousand rows across defaultParallelism python tasks costs
-        # more in worker round-trips than the kernel computes
-        src = (parallelize_small(codes) if n_docs >= PIGEONHOLE_MIN_ROWS
-               else codes)
-        return prefix_postings_arrow(src, id_col, threshold, blacklist)
+        lambda: _compute_blacklist(codes, ex, max_df, n_docs))
+    from vectordb_testbricks_spark.operators.arrow_kernels import (
+        prefix_postings_arrow)
+    # widen only CPU-heavy inputs: at fixture scale, fanning a few
+    # thousand rows across defaultParallelism python tasks costs more in
+    # worker round-trips than the kernel computes
+    src = parallelize_small(codes) if n_docs >= BARRIER_MIN_ROWS else codes
+    return prefix_postings_arrow(src, id_col, threshold, blacklist)
+
+
+def _code_order_postings_jvm(codes: DataFrame, id_col: str,
+                             threshold: float, max_df: int) -> DataFrame:
+    """JVM twin of :func:`_code_order_postings` — the identity tests'
+    reference: exact df aggregation for the over-``max_df`` codes, a
+    broadcast anti-join, and a per-doc window for ``pos``."""
     from pyspark.sql import Window
-    from pyspark.sql import types as T
-    spark = codes.sparkSession
+    over = (codes.select(F.explode("codes").alias("code"))
+            .groupBy("code").agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") > max_df).select("code"))
     sh = (codes.select(F.col(id_col), F.size("codes").alias("sz"),
                        F.posexplode("codes").alias("_p0", "code"))
-          .drop("_p0").filter(F.col("code").isNotNull()))
-    if blacklist:
-        bl = spark.createDataFrame(
-            [(c,) for c in blacklist],
-            T.StructType([T.StructField("code", T.LongType(), False)]))
-        sh = sh.join(F.broadcast(bl), "code", "left_anti")
+          .drop("_p0").filter(F.col("code").isNotNull())
+          .join(F.broadcast(over), "code", "left_anti"))
     w = Window.partitionBy(id_col).orderBy("code")
     return (sh.withColumn("pos", F.row_number().over(w) - 1)
             .filter(F.col("pos") <
@@ -637,7 +616,6 @@ def _build_code_order_postings(codes: DataFrame, id_col: str,
 def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
                           max_df: int = 50, min_shared: int = 1,
                           prefix: bool = True, order: str = "rarity",
-                          impl: str = "jvm",
                           n_docs: int | None = None,
                           _cache_out: list | None = None) -> DataFrame:
     """Candidate (id_a, id_b) pairs from the inverted shingle-code index.
@@ -675,7 +653,7 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
     df asc, code tie-break, the canonical fan-out heuristic) or
     ``"code"`` (code asc — the prefix lemma holds unchanged, and the
     posting build loses its two full-stream shuffles; see
-    :func:`_code_order_postings`, whose ``impl`` arg this forwards).
+    :func:`_code_order_postings`).
     The FINAL pair set out of :func:`ngram_jaccard_pairs` is
     order-independent at ``min_shared=1`` — candidates are a superset
     either way and exact-Jaccard verification decides membership."""
@@ -683,11 +661,6 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
     if order not in ("rarity", "code"):
         raise ValueError(f"unknown order {order!r} "
                          f"(expected 'rarity' or 'code')")
-    if impl not in ("arrow", "jvm"):
-        # a typo ('Arrow', 'simd') would silently take the JVM path and
-        # silently disable the pigeonhole scale escape (ADVICE r10)
-        raise ValueError(f"unknown impl {impl!r} "
-                         f"(expected 'arrow' or 'jvm')")
     # barrier_if_large (not bare shared_persist): the candidate
     # self-join's two legs are independent shuffle stages that AQE
     # submits concurrently — against a cold posting cache each leg
@@ -704,7 +677,7 @@ def ngram_candidate_pairs(codes: DataFrame, id_col: str, threshold: float,
     # for the session's lifetime (ADVICE r11).
     if order == "code" and prefix:
         posting = barrier_if_large(
-            _code_order_postings(codes, id_col, threshold, max_df, impl,
+            _code_order_postings(codes, id_col, threshold, max_df,
                                  n_docs=n_docs), n_docs)
     elif prefix:
         sh = codes.select(F.col(id_col), F.size("codes").alias("sz"),
@@ -764,8 +737,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
                         n: int = 3, threshold: float = 0.5,
                         max_df: int = 50, min_shared: int = 1,
                         prefix: bool = True, order: str = "rarity",
-                        impl: str | None = None,
-                        posting_impl: str | None = None,
                         n_docs: int | None = None,
                         stage_dir: str | None = None) -> DataFrame:
     """Inverted-index n-gram Jaccard: prefix-filtered candidate pairs
@@ -782,11 +753,10 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     The inverted index posts hashed shingle codes (bigint join keys — raw
     shingle strings cost ~3× in shuffle codes and key comparison).
 
-    ``impl`` picks the shingle-code materialization — ``"jvm"``
-    (default) is the Column HOF path;
-    ``"arrow"`` reuses the MinHash Arrow kernel's codes output
-    (bit-identical; the kernel is the JIT-slow-mode escape the 1M/10M
-    scale entries take, BASELINE.md r08).
+    The ``n_docs`` hint picks the kernels of the shingle codes and the
+    verify (the measured crossover, see arrow_kernels): at or above
+    ``BARRIER_MIN_ROWS`` both run as Arrow kernels; below it, or with
+    no hint, both run as JVM expressions.
 
     ``order`` picks the prefix total order (forwarded to
     :func:`ngram_candidate_pairs`): ``"rarity"`` is the canonical
@@ -795,20 +765,11 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     spill — in exchange for hash-ordered prefixes (fan-out still bounded
     by ``max_df``). The returned pair set is identical at
     ``min_shared=1``: candidates are a superset under either order and
-    the exact-Jaccard verify decides membership.
-
-    ``posting_impl`` (default: same as ``impl``) picks the POSTING
-    build engine independently of the codes materialization — lets a
-    caller share one JVM codes cache across orders while still routing
-    the code-order posting build through the Arrow kernel (the
-    dd_ngram_jaccard oracle entry's shape)."""
+    the exact-Jaccard verify decides membership."""
     from vectordb_testbricks_spark.operators.arrow_kernels import (
-        minhash_codes_sigs, resolve_impl)
-    impl = resolve_impl(impl, "jvm", "ngram")
-    if posting_impl is not None and posting_impl not in ("arrow", "jvm"):
-        raise ValueError(f"unknown ngram posting impl {posting_impl!r} "
-                         f"(expected 'arrow' or 'jvm')")
-    if impl == "arrow":
+        jaccard_arrow, minhash_codes_sigs)
+    at_scale = n_docs is not None and n_docs >= BARRIER_MIN_ROWS
+    if at_scale:
         # with_sigs=False: column pruning can't reach inside the kernel,
         # and this pipeline never ranks signatures
         codes = shared_persist(
@@ -821,8 +782,8 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
     phase1_caches: list = []
     cands = ngram_candidate_pairs(codes, id_col, threshold, max_df=max_df,
                                   min_shared=min_shared, prefix=prefix,
-                                  order=order, impl=posting_impl or impl,
-                                  n_docs=n_docs, _cache_out=phase1_caches)
+                                  order=order, n_docs=n_docs,
+                                  _cache_out=phase1_caches)
     if stage_dir is not None:
         # Two-phase pipeline break (r11): run candidate generation to
         # parquet NOW, then verify against the parquet read. In the
@@ -868,8 +829,9 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str, text_col: str,
         # (same double-GC settle pattern as bench's scale loop)
         for _ in range(2):
             spark._jvm.System.gc()
-    return (jaccard_pairs(codes, cands, id_col, impl=impl)
-            .filter(F.col("jaccard") >= threshold))
+    verified = (jaccard_arrow(_attach_codes(codes, cands, id_col))
+                if at_scale else jaccard_pairs(codes, cands, id_col))
+    return verified.filter(F.col("jaccard") >= threshold)
 
 
 # ------------------------------------------------------- embedding near-dup

@@ -114,8 +114,7 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
                flt: str | Column | None = None,
                output_fields: list[str] | None = None,
                group_by: str | list[str] | None = None,
-               group_size: int = 1,
-               impl: str | None = None) -> DataFrame:
+               group_size: int = 1) -> DataFrame:
     """V1/V2/V5: ANN top-k per query vector, optional pre-filter + grouping.
 
     ``queries`` must have (query_id, qvec). Returns
@@ -128,23 +127,12 @@ def knn_search(base: DataFrame, queries: DataFrame, vec_col: str, id_col: str,
     (feature-inventory doc §2); the plan shape is identical, the window
     partition key just widens.
 
-    ``impl`` picks the scoring + map-side partial top-k path: ``"jvm"``
-    (default) is the Column HOF expression
-    path below; ``"arrow"`` routes the non-grouping path through the
-    numpy kernel (arrow_kernels.knn_search_arrow — bit-identical rows,
-    scores, and ranks; the scoring HOF chain is the same interpreted
-    expression class as the r08 slow mode, and the kernel is immune by
-    construction). Grouping search keeps the JVM path.
+    Scoring is the JVM expression path; arrow_kernels.knn_search_arrow
+    is its bit-identical Arrow twin for the batch regime (see the kernel
+    list there).
     """
-    from vectordb_testbricks_spark.operators.arrow_kernels import (
-        knn_search_arrow, resolve_impl)
     gb = ([group_by] if isinstance(group_by, str)
           else list(group_by) if group_by else [])
-    impl = resolve_impl(impl, "jvm", "knn")
-    if impl == "arrow" and not gb:
-        return knn_search_arrow(base, queries, vec_col, id_col,
-                                metric=metric, k=k, flt=flt,
-                                output_fields=output_fields)
     if flt is not None:
         pred = flt if isinstance(flt, Column) else compile_expr(flt, base)
         base = base.filter(pred)  # pre-filter before ranking (V2)
@@ -283,7 +271,9 @@ def sparse_postings(base: DataFrame, map_col: str, id_col: str,
     This is the SPARSE_INVERTED_INDEX physical layout (reference index
     vocabulary, schema_matrix_2_6.yaml:63,80): the same shape as the BM25
     tf sidecar, so a function-field corpus can serve sparse IP straight
-    from the sidecar with zero extra materialization."""
+    from the sidecar with zero extra materialization. The JVM twin of
+    arrow_kernels.sparse_postings_arrow, which the index build runs; kept
+    as the identity tests' reference."""
     return base.select(
         id_col,
         F.explode(map_col).alias(key_col, weight_col))
