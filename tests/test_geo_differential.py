@@ -1,5 +1,5 @@
 """P12 differential: the hand-rolled ray-casting Column expression
-(exprlang.compiler.st_contains / _ray_cast) vs an INDEPENDENT
+(exprlang.compiler.st_contains / _ray_cast_sql) vs an INDEPENDENT
 exact-arithmetic reference (judge r06 #3 — geo was the one predicate
 family with hand-rolled math and no second implementation checking it).
 

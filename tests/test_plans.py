@@ -518,3 +518,98 @@ def test_fusion_agg_and_rerank_share_one_exchange(spark):
     assert len(ex_lines) == 1, p
     assert "query_id" in ex_lines[0], p
     assert "doc_id" not in ex_lines[0], p
+
+
+def _job_ids(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_serving_builds_run_no_job_and_no_python_rdd(spark, tables,
+                                                     tmp_path):
+    """The serving path's fixed per-call cost: building a query's DataFrame
+    must launch no Spark job (a literal query side is a LocalRelation, not
+    a parallelized PythonRDD, and the manager opens its own parquet with
+    the schema its last write inferred), and no executed plan may
+    scan a PythonRDD (``Scan ExistingRDD`` — one Python worker task per
+    slice, invisible to a Python-node count)."""
+    from vectordb_testbricks_spark.manager import CollectionManager
+    from vectordb_testbricks_spark.operators.ann_index import (
+        build_ivf, ivf_search)
+    from vectordb_testbricks_spark.operators.fusion import (
+        rrf_fuse, weighted_fuse)
+    from vectordb_testbricks_spark.operators.search import (
+        knn_search, queries_df)
+    from vectordb_testbricks_spark.schema import (
+        FieldSpec, FunctionSpec, SchemaSpec)
+    mgr = CollectionManager(spark, str(tmp_path / "wh"))
+    mgr.create_collection(SchemaSpec("c", [
+        FieldSpec("id", "INT64", primary=True),
+        FieldSpec("text", "VARCHAR", max_length=128, enable_analyzer=True),
+        FieldSpec("price", "DOUBLE"),
+        FieldSpec("vec", "FLOAT_VECTOR", dim=4),
+        FieldSpec("sparse_bm25", "SPARSE_FLOAT_VECTOR"),
+    ], functions=[FunctionSpec("fts", "BM25", "text", "sparse_bm25")]))
+    mgr.insert("c", spark.createDataFrame(
+        [(i, f"alpha beta w{i % 3}", float(i), [float(i), 1.0, 0.5, -1.0])
+         for i in range(12)],
+        "id long, text string, price double, vec array<float>").withColumn(
+        "sparse_bm25", F.lit(None).cast("map<int,float>")))
+    emb = tables["embeddings"].df
+    model = build_ivf(emb, "embedding", "vec_id", n_lists=4, seed=7)
+    qv = [0.5, 1.0, 0.5, -1.0]
+
+    def dense():
+        return knn_search(mgr.read("c"), queries_df(spark, [qv]), "vec",
+                          "id", metric="COSINE", k=5, flt="price > 2")
+
+    def text(flt=None):
+        return mgr.bm25_search("c", "alpha w1", k=5, flt=flt)
+
+    builds = {
+        "knn": lambda: knn_search(emb, queries_df(spark, [[0.1] * 64]),
+                                  "embedding", "vec_id", k=5),
+        "read": lambda: mgr.read("c"),
+        "bm25": text,
+        "bm25_filtered": lambda: text("price > 2"),
+        "rrf": lambda: rrf_fuse([dense(), text()], "id", k=5),
+        "weighted": lambda: weighted_fuse([dense(), text("price > 2")],
+                                          [0.6, 0.4], "id", k=5,
+                                          normalize="arctan"),
+        "ivf": lambda: ivf_search(model, queries_df(spark, [[0.1] * 64]),
+                                  k=5, nprobe=2),
+    }
+    for name, build in builds.items():
+        before = _job_ids(spark)
+        df = build()
+        assert _job_ids(spark) == before, f"{name}: job during build"
+        p = _plan(df)
+        assert "Scan ExistingRDD" not in p, (name, p)
+    # the guarded plans still run and rank
+    assert text().count() > 0 and dense().count() > 0
+
+
+def test_package_builds_no_python_list_relation():
+    """Every literal relation in the package goes through
+    session.local_relation; a ``createDataFrame(`` call anywhere else
+    would bring back the PythonRDD query side."""
+    import ast
+    import pathlib
+
+    import vectordb_testbricks_spark as pkg
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = set()
+        for fn in ast.walk(tree):
+            if (isinstance(fn, ast.FunctionDef)
+                    and fn.name == "local_relation"
+                    and path.name == "session.py"):
+                allowed |= {id(n) for n in ast.walk(fn)}
+        offenders += [
+            f"{path.relative_to(root)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame" and id(n) not in allowed]
+    assert not offenders, offenders

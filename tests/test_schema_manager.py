@@ -1388,3 +1388,124 @@ def test_text_embedding_search_rejects_none_query(mgr, spark):
         .withColumn("sv", F.lit(None).cast("map<int,float>")))
     with pytest.raises(ValueError, match=r"position \[0\] is None"):
         mgr.text_embedding_search("noneq2", [None], k=1)
+
+
+# ------------------------------------------------- parquet schema memo
+
+def _assert_memo_matches_inference(mgr, spark, name, **read_kw):
+    """``read`` and every memoized parquet schema of the collection equal
+    what a schema-less ``spark.read.parquet`` infers right now, and the
+    open runs no footer job: the write refreshed the memo (a snapshot
+    read, whose pinned dir no write refreshes, pays on its first open
+    only)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def open_all():
+        before = set(tracker.getJobIdsForGroup(None))
+        df = mgr.read(name, **read_kw)
+        mgr.function_tables(name)
+        return df, set(tracker.getJobIdsForGroup(None)) == before
+
+    df, no_job = open_all()
+    assert no_job or "snapshot_id" in read_kw
+    assert open_all()[1]
+    if df.isEmpty():                           # nothing on disk to infer
+        return
+    data = (mgr._snapshot_data_dir(name, read_kw["snapshot_id"])
+            if "snapshot_id" in read_kw else mgr._data_dir(name))
+    assert df.schema == spark.read.parquet(data).schema
+    slot = mgr._parquet_schemas(name)
+    assert {"data", "fts/tf", "fts/stats_terms", "fts/stats_global"} <= set(
+        slot)
+    for role, ((path, _key), schema) in slot.items():
+        assert schema == spark.read.parquet(path).schema, role
+
+
+def test_parquet_schema_memo_tracks_every_write(mgr, spark):
+    """The manager opens its own parquet with a memoized schema. After
+    every kind of write the memoized schema must equal what inference
+    would say: new partition values (which type the partition column),
+    rewrites and add/drop_field (fresh version dirs) and snapshot reads
+    (a pinned dir) all change the key."""
+    mgr.create_collection(SchemaSpec("m_coll", [
+        FieldSpec("id", "INT64", primary=True),
+        FieldSpec("v", "INT64"),
+        FieldSpec("text", "VARCHAR", max_length=64, enable_analyzer=True),
+        FieldSpec("sparse_bm25", "SPARSE_FLOAT_VECTOR"),
+    ], partitions=["2024", "abc"],
+        functions=[FunctionSpec("fts", "BM25", "text", "sparse_bm25")]))
+
+    def rows(ids, word="alpha"):
+        return spark.createDataFrame(
+            [(i, i * 10, f"{word} w{i}") for i in ids],
+            "id long, v long, text string").withColumn(
+            "sparse_bm25", F.lit(None).cast("map<int,float>"))
+
+    def check(**kw):
+        _assert_memo_matches_inference(mgr, spark, "m_coll", **kw)
+
+    mgr.insert("m_coll", rows(range(4)))
+    check()
+    mgr.insert("m_coll", rows(range(4, 6)), partition_name="2024")
+    check()
+    mgr.insert("m_coll", rows(range(6, 8)), partition_name="abc")
+    check()
+    mgr.upsert("m_coll", rows([1, 9], "beta"))
+    check()
+    mgr.partial_update("m_coll", spark.createDataFrame(
+        [(2, 99)], "id long, v long"))
+    check()
+    mgr.delete("m_coll", "id == 3")
+    check()
+    mgr.add_field("m_coll", FieldSpec("note", "VARCHAR", max_length=16,
+                                      nullable=True))
+    check()
+    assert "note" in mgr.read("m_coll").columns
+    mgr.drop_field("m_coll", "note")
+    check()
+    assert "note" not in mgr.read("m_coll").columns
+    sid = mgr.create_snapshot("m_coll")
+    mgr.truncate_collection("m_coll")
+    check()
+    assert mgr.read("m_coll").count() == 0
+    mgr.insert("m_coll", rows([20]), partition_name="abc")
+    check()
+    check(snapshot_id=sid)
+    assert mgr.read("m_coll", snapshot_id=sid).count() == 8
+
+
+def test_parquet_schema_memo_follows_partition_type_inference(mgr, spark):
+    """``_partition=2024`` alone infers an int partition column; adding
+    ``abc`` flips it to string. The memo key covers the partition-dir
+    listing, so the flip is never served stale."""
+    mgr.create_collection(SchemaSpec("p_coll", [
+        FieldSpec("id", "INT64", primary=True),
+        FieldSpec("v", "INT64"),
+    ], partitions=["2024", "abc"]))
+    df = spark.createDataFrame([(1, 10), (2, 20)], "id long, v long")
+    mgr.insert("p_coll", df, partition_name="2024")
+    first = mgr.read("p_coll").schema
+    assert first[PARTITION_COL].dataType.simpleString() == "int"
+    assert mgr.read("p_coll").schema == first
+    mgr.insert("p_coll", df, partition_name="abc")
+    flipped = mgr.read("p_coll").schema
+    assert flipped[PARTITION_COL].dataType.simpleString() == "string"
+    assert flipped == spark.read.parquet(mgr._data_dir("p_coll")).schema
+    assert mgr.read("p_coll").count() == 4
+
+
+def test_dropped_collection_leaves_no_schema_memo(mgr, spark):
+    from vectordb_testbricks_spark import session
+    mgr.create_collection(SchemaSpec("d_coll", [
+        FieldSpec("id", "INT64", primary=True), FieldSpec("v", "INT64")]))
+    mgr.insert("d_coll", spark.createDataFrame([(1, 2)], "id long, v long"))
+    assert mgr.read("d_coll").count() == 1
+    coll_dir = mgr._dir("d_coll")
+
+    def entries():
+        return [k for k in session._memo
+                if isinstance(k, tuple) and coll_dir in k]
+
+    assert entries()
+    mgr.drop_collection("d_coll")
+    assert not entries()

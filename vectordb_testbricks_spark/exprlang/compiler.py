@@ -4,7 +4,7 @@ Everything compiles to built-in Spark SQL functions (JVM-side, codegen-able):
 simple comparisons reach the parquet scan as ``PushedFilters``; JSON paths use
 ``get_json_object``; array ops use ``array_contains``/``arrays_overlap``/
 ``array_except``; ``ST_CONTAINS`` with a literal polygon is unrolled into a
-ray-casting crossing-parity expression over the polygon's edges (no UDF).
+ray-casting crossing-parity SQL expression over the polygon's edges (no UDF).
 
 Type discipline: Milvus compares JSON-path values numerically; we cast the
 extracted JSON string based on the literal operand's Python type (numeric →
@@ -13,6 +13,7 @@ double, bool → boolean, str → as-is).
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -529,35 +530,62 @@ class _Compiler:
         raise ExprCompileError(f"expected array operand, got {node!r}")
 
     def st_contains(self, field_node, poly_node) -> Column:
-        """Point-in-polygon via ray casting, unrolled into Column expressions
-        (reference: run_go_bench_horizon.py:98-101; polygon construction
+        """Point-in-polygon via ray casting (reference:
+        run_go_bench_horizon.py:98-101; polygon construction
         cal_polygon_by_point.py:3-55). The polygon is a literal WKT string;
-        the field holds WKT ``POINT (x y)`` strings."""
+        the field is a declared column of WKT ``POINT (x y)`` strings.
+
+        One SQL expression, one py4j call: the point is extracted once per
+        row (one ``regexp_extract`` per coordinate) and bound as the lambda
+        variable ``p``, so the per-edge terms read ``p.x``/``p.y`` instead
+        of re-running the regex per term (a Filter condition gets no
+        common-subexpression elimination). A bounding-box test runs ahead
+        of the edge terms (the cheap MBR filter before exact geometry,
+        Raptor VLDB 2019): outside the box the crossing count is 0 or
+        even, so the box only skips work. A NULL or non-POINT value is
+        not contained."""
         poly = _lit_value(poly_node)
         verts = _parse_wkt_polygon(str(poly))
-        op = self.operand(field_node)
-        x = F.regexp_extract(op.col, r"POINT\s*\(\s*(-?[\d.]+)\s+(-?[\d.]+)\s*\)", 1) \
-            .try_cast("double")
-        y = F.regexp_extract(op.col, r"POINT\s*\(\s*(-?[\d.]+)\s+(-?[\d.]+)\s*\)", 2) \
-            .try_cast("double")
-        return _ray_cast(x, y, verts)
+        if (not isinstance(field_node, ast.Path) or field_node.accessors
+                or field_node.name not in self.schema):
+            raise ExprCompileError("ST_CONTAINS needs a plain field name")
+        field = "`" + field_node.name.replace("`", "``") + "`"
+
+        def coord(group: int) -> str:
+            return (f"try_cast(regexp_extract({field}, r'{_POINT_RE}', "
+                    f"{group}) AS DOUBLE)")
+
+        return F.expr(f"exists(array(named_struct('x', {coord(1)}, "
+                      f"'y', {coord(2)})), p -> {_ray_cast_sql(verts)})")
 
 
-def _ray_cast(x: Column, y: Column, verts: list[tuple[float, float]]) -> Column:
-    """Crossing-parity point-in-polygon as a pure Column expression."""
-    crossings = F.lit(0)
+_POINT_RE = r"POINT\s*\(\s*(-?[\d.]+)\s+(-?[\d.]+)\s*\)"
+
+
+def _ray_cast_sql(verts: list[tuple[float, float]]) -> str:
+    """Crossing-parity point-in-polygon over the lambda variable ``p`` as
+    Spark SQL: a bounding-box pre-test, then one CASE term per
+    non-horizontal edge. Vertices are DOUBLE literals (``repr`` round-trips
+    every finite double exactly)."""
+    def d(v: float) -> str:
+        return f"{v!r}D"
+
+    xs = [x for x, _ in verts]
+    ys = [y for _, y in verts]
+    box = (f"coalesce(p.x BETWEEN {d(min(xs))} AND {d(max(xs))} "
+           f"AND p.y BETWEEN {d(min(ys))} AND {d(max(ys))}, false)")
+    terms = []
     n = len(verts)
     for i in range(n):
         xi, yi = verts[i]
         xj, yj = verts[(i + 1) % n]
         if yi == yj:
             continue  # horizontal edge never crosses the upward ray test
-        cond = (
-            ((F.lit(yi) > y) != (F.lit(yj) > y))
-            & (x < (F.lit(xj - xi) * (y - F.lit(yi)) / F.lit(yj - yi) + F.lit(xi)))
-        )
-        crossings = crossings + F.when(cond, 1).otherwise(0)
-    return crossings % 2 == 1
+        terms.append(
+            f"CASE WHEN ({d(yi)} > p.y) <> ({d(yj)} > p.y) AND p.x < "
+            f"{d(xj - xi)} * (p.y - {d(yi)}) / {d(yj - yi)} + {d(xi)} "
+            f"THEN 1 ELSE 0 END")
+    return f"{box} AND ({' + '.join(['0', *terms])}) % 2 = 1"
 
 
 def _parse_wkt_polygon(wkt: str) -> list[tuple[float, float]]:
@@ -567,7 +595,10 @@ def _parse_wkt_polygon(wkt: str) -> list[tuple[float, float]]:
     pts = []
     for pair in m.group(1).split(","):
         xs, ys = pair.split()
-        pts.append((float(xs), float(ys)))
+        pt = (float(xs), float(ys))
+        if not all(math.isfinite(v) for v in pt):
+            raise ExprCompileError(f"non-finite polygon vertex: {wkt!r}")
+        pts.append(pt)
     if len(pts) > 1 and pts[0] == pts[-1]:
         pts = pts[:-1]
     if len(pts) < 3:

@@ -28,13 +28,28 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vectordb_testbricks_spark.schema import (
     DYNAMIC_FIELD_COL, FieldSpec, FunctionSpec, IndexSpec, SchemaError,
     SchemaSpec)
+from vectordb_testbricks_spark.session import (
+    local_relation, session_forget, session_memo)
 
 PARTITION_COL = "_partition"  # physical routing column
 INGEST_TS_COL = "_ingest_ts"  # TTL stamp (only on ttl_seconds collections)
+
+
+def _as_nullable(schema: T.StructType) -> T.StructType:
+    """``schema`` with every field, array element and map value nullable —
+    how Spark reports the schema of a parquet file source."""
+    def relax(v):
+        if isinstance(v, dict):
+            return {k: True if k in ("nullable", "containsNull",
+                                     "valueContainsNull") else relax(x)
+                    for k, x in v.items()}
+        return [relax(x) for x in v] if isinstance(v, list) else v
+    return T.StructType.fromJson(relax(schema.jsonValue()))
 
 
 def _spec_to_json(spec: SchemaSpec) -> str:
@@ -84,6 +99,49 @@ class CollectionManager:
     def _schema_file(self, name: str) -> str:
         return os.path.join(self._dir(name), "schema.json")
 
+    def _parquet_schemas(self, real: str) -> dict:
+        """This collection's slot in the session memo: role → (key, the
+        schema a schema-less ``spark.read.parquet`` inferred under key)."""
+        return session_memo(self.spark, ("parquet_schemas", self._dir(real)),
+                            dict)
+
+    def _open_parquet(self, real: str, role: str, path: str,
+                      key: tuple) -> DataFrame:
+        """``spark.read.parquet(path)``, opened with the schema the same
+        schema-less read inferred before (each completed write fills the
+        memo, see :meth:`_write_lock`), so a serving read runs no
+        footer-merge job. ``key`` must change whenever inference could:
+        callers pass the spec the files follow (all of it for the data
+        dir, the PK field for the sidecars: a collection re-created under
+        the same name may declare other types) and, for the data dir, its
+        partition-dir listing, since partition values type the partition
+        column (``2024`` alone infers int, ``abc`` flips it to string).
+        Rewrites and schema changes land in a fresh version dir, so the
+        path alone retires them. One entry per role: a changed key
+        replaces the old one."""
+        slot = self._parquet_schemas(real)
+        hit = slot.get(role)
+        if hit is not None and hit[0] == (path, key):
+            return self.spark.read.schema(hit[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        slot[role] = ((path, key), df.schema)
+        return df
+
+    def _remember_sidecar_schemas(self, real: str, spec: SchemaSpec,
+                                  fn_name: str, base: str,
+                                  written: dict[str, DataFrame]) -> None:
+        """Record the schemas of BM25 sidecars a write just committed under
+        ``base`` (``written``: sub-dir → the DataFrame written there), so
+        the next search opens them without inferring. Spark infers a
+        partition-free parquet dir it wrote as the written schema made
+        nullable (checked against inference after every kind of write in
+        tests/test_schema_manager.py). Keyed by the PK field: the one part
+        of the spec the sidecar columns depend on."""
+        slot = self._parquet_schemas(real)
+        for sub, df in written.items():
+            slot[f"{fn_name}/{sub}"] = ((os.path.join(base, sub), (spec.pk,)),
+                                        _as_nullable(df.schema))
+
     # ----------------------------------------------------------- aliases
     def _read_aliases(self) -> dict[str, str]:
         if os.path.exists(self._aliases_file):
@@ -128,6 +186,7 @@ class CollectionManager:
         stale = self._loaded.pop(real, None)
         if stale is not None:  # don't leave cached blocks of deleted data
             stale.unpersist()
+        session_forget(self._parquet_schemas(real))
         shutil.rmtree(self._dir(real), ignore_errors=True)
         aliases = {a: c for a, c in self._read_aliases().items() if c != real}
         with open(self._aliases_file, "w") as fh:
@@ -203,7 +262,13 @@ class CollectionManager:
         stats deltas — assumes ONE writer per collection at a time; this
         makes the assumption mechanical instead of documentation-only for
         same-host concurrent writers (threads or processes). On object
-        storage the equivalent is the catalog/metastore commit lock."""
+        storage the equivalent is the catalog/metastore commit lock.
+
+        A write that completes refreshes the parquet schema memo for the
+        data it committed (still under the lock; the BM25 sidecar writes
+        record theirs, see :meth:`_remember_sidecar_schemas`), so the
+        reads that follow open their parquet without a footer-merge job:
+        schema inference is write-path work, not per-query build work."""
         if self.is_external(real):
             # External Collections are read-only (feature-inventory §5
             # "禁止写操作"); every mutating path funnels through this
@@ -220,6 +285,7 @@ class CollectionManager:
             except ImportError:      # non-POSIX: documented single-writer
                 pass
             yield
+            self.read(real)
 
     def insert(self, name: str, df: DataFrame,
                partition_name: str | None = None) -> None:
@@ -328,6 +394,10 @@ class CollectionManager:
                     os.path.join(base, "stats_terms"))
                 glob_d.write.mode("append").parquet(
                     os.path.join(base, "stats_global"))
+                self._remember_sidecar_schemas(
+                    real, spec, fn.name, base,
+                    {"tf": tf, "stats_terms": terms_d,
+                     "stats_global": glob_d})
             os.remove(pending)
 
     def upsert(self, name: str, df: DataFrame,
@@ -669,6 +739,9 @@ class CollectionManager:
                 os.path.join(root, version, "stats_terms"))
             glob_d.write.mode("overwrite").parquet(
                 os.path.join(root, version, "stats_global"))
+            self._remember_sidecar_schemas(
+                real, spec, fn.name, os.path.join(root, version),
+                {"tf": tf, "stats_terms": terms_d, "stats_global": glob_d})
             tk.unpersist()   # all four writes done; drop the batch cache
             tmp = os.path.join(root, "CURRENT.tmp")
             with open(tmp, "w") as fh:
@@ -697,19 +770,19 @@ class CollectionManager:
         base = self._fn_data_dir(real, fn.name)
         pk = spec.pk.name
         if not self._parquet_nonempty(os.path.join(base, "tf")):
-            from pyspark.sql import types as T
             pk_t = spec.pk.spark_type()
-            tf = self.spark.createDataFrame([], T.StructType([
+            tf = local_relation(self.spark, [], T.StructType([
                 T.StructField(pk, pk_t), T.StructField("term", T.StringType()),
                 T.StructField("tf", T.IntegerType()),
                 T.StructField("dl", T.IntegerType())]))
-            stats = self.spark.createDataFrame([], T.StructType([
+            stats = local_relation(self.spark, [], T.StructType([
                 T.StructField("term", T.StringType()),
                 T.StructField("df_t", T.LongType()),
                 T.StructField("n_docs", T.LongType()),
                 T.StructField("avgdl", T.DoubleType())]))
             return tf, stats
-        tf = self.spark.read.parquet(os.path.join(base, "tf"))
+        tf = self._open_parquet(real, f"{fn.name}/tf",
+                                os.path.join(base, "tf"), (spec.pk,))
         if (os.path.exists(self._stats_pending_path(base))
                 or not self._parquet_nonempty(
                     os.path.join(base, "stats_terms"))):
@@ -721,10 +794,12 @@ class CollectionManager:
             doclen = self._doclen_or_derived(base, tf)
             terms_log, glob_log = self._fn_stats_deltas(tf, doclen)
         else:
-            terms_log = self.spark.read.parquet(
-                os.path.join(base, "stats_terms"))
-            glob_log = self.spark.read.parquet(
-                os.path.join(base, "stats_global"))
+            terms_log = self._open_parquet(
+                real, f"{fn.name}/stats_terms",
+                os.path.join(base, "stats_terms"), (spec.pk,))
+            glob_log = self._open_parquet(
+                real, f"{fn.name}/stats_global",
+                os.path.join(base, "stats_global"), (spec.pk,))
         df_t = terms_log.groupBy("term").agg(F.sum("df_t").alias("df_t"))
         # try_divide: a truncated (or fully-deleted) collection compacts
         # the log to n_docs = 0, and ANSI mode would otherwise throw on
@@ -798,17 +873,18 @@ class CollectionManager:
         # it raises. (The partition subdirs themselves start with "_"
         # because the column is named _partition, so probe for them and
         # for part files explicitly, not for "non-hidden entries".)
-        if not os.path.exists(data) or not any(
-                e.startswith((f"{PARTITION_COL}=", "part-"))
-                for e in os.listdir(data)):
+        entries = sorted(os.listdir(data)) if os.path.exists(data) else []
+        if not any(e.startswith((f"{PARTITION_COL}=", "part-"))
+                   for e in entries):
             st = spec.to_struct_type().add(PARTITION_COL, "string")
             if spec.ttl_seconds or spec.ttl_field:
                 # the TTL filter below references the stamp column; the
                 # empty frame must carry it or a never-written TTL
                 # collection crashes every read
                 st = st.add(INGEST_TS_COL, "timestamp")
-            return self.spark.createDataFrame([], st)
-        df = self.spark.read.parquet(data)
+            return local_relation(self.spark, [], st)
+        df = self._open_parquet(real, "data", data, (spec, tuple(
+            e for e in entries if e.startswith(f"{PARTITION_COL}="))))
         if partition_names:
             df = df.filter(F.col(PARTITION_COL).isin(partition_names))
         if spec.ttl_seconds or spec.ttl_field:
@@ -899,8 +975,9 @@ class CollectionManager:
         with open(self._external_file(real)) as fh:
             meta = _json.load(fh)
         if not meta["files"]:
-            return self.spark.createDataFrame(
-                [], spec.to_struct_type().add(PARTITION_COL, "string"))
+            return local_relation(
+                self.spark, [],
+                spec.to_struct_type().add(PARTITION_COL, "string"))
         df = (self.spark.read.option("basePath", meta["source_uri"])
               .parquet(*meta["files"]))
         if PARTITION_COL not in df.columns:
@@ -997,9 +1074,9 @@ class CollectionManager:
         params = fn.params or {}
         texts = [query_texts] if isinstance(query_texts, str) \
             else list(query_texts)
-        # a None query text featurizes to a None vector, which the
-        # non-nullable queries_df schema rejects with an opaque
-        # createDataFrame error deep in Spark (and the hashing twin would
+        # a None query text featurizes to a None vector, which
+        # queries_df rejects with an opaque TypeError from its float
+        # conversion (and the hashing twin would
         # AttributeError on .lower()) — name the culprit up front
         # (r08 ADVICE)
         bad = [i for i, t in enumerate(texts) if t is None]

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_testbricks_spark.materialize import shared_persist
+from vectordb_testbricks_spark.session import local_relation
 
 from vectordb_testbricks_spark.functions.vector import score_expr
 
@@ -210,7 +211,8 @@ def write_ivf(model: IvfModel, path: str) -> None:
         .write.mode("overwrite") \
         .partitionBy("centroid_id").parquet(path)
     sess = model.assigned.sparkSession
-    meta = sess.createDataFrame(
+    meta = local_relation(
+        sess,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.centroids)],
         "centroid_id int, centroid array<double>")
     meta.coalesce(1).write.mode("overwrite").parquet(_centroids_path(path))
@@ -316,7 +318,8 @@ def write_sparse_inverted(model: SparseInvModel, path: str) -> None:
      .write.mode("overwrite")
      .partitionBy(SPARSE_BUCKET_COL).parquet(path))
     sess = model.postings.sparkSession
-    sess.createDataFrame(
+    local_relation(
+        sess,
         [(model.n_buckets, model.key_col, model.id_col, model.weight_col)],
         "n_buckets int, key_col string, id_col string, weight_col string"
     ).coalesce(1).write.mode("overwrite").parquet(
@@ -391,9 +394,9 @@ def lsh_search(indexed: DataFrame, queries: DataFrame, id_col: str,
     probe = [(int(r["query_id"]), int(r["_qb"]) ^ m)
              for r in qrows for m in masks]
     spark = queries.sparkSession
-    probe_df = spark.createDataFrame(probe, "query_id int, bucket bigint")
-    qn = spark.createDataFrame(
-        [(int(r["query_id"]), list(r["qvec"])) for r in qrows],
+    probe_df = local_relation(spark, probe, "query_id int, bucket bigint")
+    qn = local_relation(
+        spark, [(int(r["query_id"]), list(r["qvec"])) for r in qrows],
         "query_id int, qvec array<double>")
     pruned = indexed.join(F.broadcast(probe_df), "bucket")
     scored = (pruned.join(F.broadcast(qn), "query_id")
@@ -517,9 +520,9 @@ def ivf_sq8_search(model: Sq8Model, queries: DataFrame, k: int = 10,
                          float(((vmin + 128.0 * inv) * qn).sum())))
         qfloat.append((qid, [float(v) for v in qv]))
     spark = queries.sparkSession
-    probe_df = spark.createDataFrame(probes, "query_id int, centroid_id int")
-    qw = spark.createDataFrame(
-        qweights, "query_id int, w array<double>, c double")
+    probe_df = local_relation(spark, probes, "query_id int, centroid_id int")
+    qw = local_relation(
+        spark, qweights, "query_id int, w array<double>, c double")
 
     pruned = model.quantized.join(F.broadcast(probe_df), "centroid_id")
     approx = (pruned.join(F.broadcast(qw), "query_id")
@@ -529,7 +532,7 @@ def ivf_sq8_search(model: Sq8Model, queries: DataFrame, k: int = 10,
     cand = (_ranked(approx, model.id_col, asc=False, k=rerank_k)
             .select("query_id", model.id_col))
 
-    qn_df = spark.createDataFrame(qfloat, "query_id int, qvec array<double>")
+    qn_df = local_relation(spark, qfloat, "query_id int, qvec array<double>")
     rescored = (model.base.join(F.broadcast(cand), model.id_col)
                 .join(F.broadcast(qn_df), "query_id")
                 .select("query_id", model.id_col,
@@ -632,9 +635,9 @@ def bin_ivf_search(model: BinIvfModel, queries: DataFrame, k: int = 10,
         qmeta.append((qid, _pack_query_bits([float(x) for x in qv]),
                       [float(x) for x in qv]))
     spark = queries.sparkSession
-    probe_df = spark.createDataFrame(probes, "query_id int, centroid_id int")
-    qdf = spark.createDataFrame(
-        qmeta, "query_id int, qbits array<bigint>, qvec array<double>")
+    probe_df = local_relation(spark, probes, "query_id int, centroid_id int")
+    qdf = local_relation(
+        spark, qmeta, "query_id int, qbits array<bigint>, qvec array<double>")
 
     pruned = model.packed.join(F.broadcast(probe_df), "centroid_id")
     approx = (pruned.join(F.broadcast(qdf.select("query_id", "qbits")),
@@ -684,8 +687,8 @@ def binary_rerank_search(base: DataFrame, queries: DataFrame, vec_col: str,
         qv = [float(x) for x in r["qvec"]]
         qmeta.append((int(r["query_id"]), _pack_query_bits(qv), qv))
     spark = queries.sparkSession
-    qdf = spark.createDataFrame(
-        qmeta, "query_id int, qbits array<bigint>, qvec array<double>")
+    qdf = local_relation(
+        spark, qmeta, "query_id int, qbits array<bigint>, qvec array<double>")
 
     approx = (packed.crossJoin(F.broadcast(qdf.select("query_id", "qbits")))
               .select("query_id", id_col,
@@ -874,7 +877,7 @@ def ivf_search(model: IvfModel, queries: DataFrame, k: int = 10,
              for r in qrows
              for c in _nearest_lists(list(r["qvec"]), model.centroids, nprobe)]
     spark = queries.sparkSession
-    probe_df = spark.createDataFrame(probe, "query_id int, centroid_id int")
+    probe_df = local_relation(spark, probe, "query_id int, centroid_id int")
     pruned = model.assigned.join(F.broadcast(probe_df), "centroid_id")
     q = queries.select("query_id", "qvec")
     score, asc = score_expr(metric, F.col(model.vec_col), F.col("qvec"))

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_testbricks_spark.exprlang import compile_expr
+from vectordb_testbricks_spark.session import local_relation
 
 K1 = 1.2
 B = 0.75
@@ -174,8 +175,7 @@ def bm25_search_many(docs: DataFrame, query_texts: list[str], id_col: str,
     kw = analyzer_kwargs(analyzer)
     qterm_rows = [(qid, t) for qid, text in enumerate(query_texts)
                   for t in py_tokenize(text, **kw)]
-    qterms_df = spark.createDataFrame(qterm_rows,
-                                      "query_id int, term string")
+    qterms_df = local_relation(spark, qterm_rows, "query_id int, term string")
     all_terms = sorted({t for _, t in qterm_rows})
     # every query analyzed to zero terms: nothing can match (isin with an
     # empty list is invalid, so short-circuit explicitly)

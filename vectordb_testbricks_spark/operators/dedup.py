@@ -35,7 +35,8 @@ from vectordb_testbricks_spark.functions.vector import cosine_sim
 from vectordb_testbricks_spark.materialize import (
     BARRIER_MIN_ROWS, barrier_if_large, materialize_barrier,
     parallelize_small, shared_persist)
-from vectordb_testbricks_spark.session import session_forget, session_memo
+from vectordb_testbricks_spark.session import (
+    local_relation, session_forget, session_memo)
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime), the classic minhash modulus
 NUM_HASHES = 16
@@ -490,8 +491,8 @@ def _compute_blacklist(codes: DataFrame, ex: DataFrame, max_df: int,
         if not cand_rows:
             rows = []
         else:
-            cdf = codes.sparkSession.createDataFrame(
-                cand_rows, "code bigint")
+            cdf = local_relation(codes.sparkSession, cand_rows,
+                                 "code bigint")
             over = (ex.join(F.broadcast(cdf), "code")
                     .groupBy("code").agg(F.count(F.lit(1)).alias("_df"))
                     .filter(F.col("_df") > max_df).select("code"))

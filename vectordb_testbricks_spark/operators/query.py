@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from vectordb_testbricks_spark.exprlang import compile_expr
+from vectordb_testbricks_spark.session import local_relation
 
 
 def _pred(df: DataFrame, flt: str | Column | None) -> Column:
@@ -105,7 +106,7 @@ def query_iterator(df: DataFrame, pk_col: str, batch_size: int,
         if checkpoint_file:
             with open(checkpoint_file, "w") as fh:
                 json.dump({"last_pk": last}, fh)
-        yield rows.sparkSession.createDataFrame(collected, rows.schema)
+        yield local_relation(rows.sparkSession, collected, rows.schema)
 
 
 def query_iterator_pages(df: DataFrame, pk_col: str, batch_size: int,
@@ -148,8 +149,8 @@ def query_iterator_pages(df: DataFrame, pk_col: str, batch_size: int,
     for pid, c in sizes:
         offsets.append((pid, acc))
         acc += c
-    off = F.broadcast(spark.createDataFrame(
-        offsets or [(0, 0)], "_pid int, _offset long"))
+    off = F.broadcast(local_relation(
+        spark, offsets or [(0, 0)], "_pid int, _offset long"))
     return (local.join(off, "_pid")
             .withColumn("page",
                         ((F.col("_offset") + F.col("_lrank") - 1)

@@ -39,11 +39,14 @@ from pyspark.sql import types as T
 from vectordb_testbricks_spark.exprlang import compile_expr
 from vectordb_testbricks_spark.functions.vector import (
     score_expr, sparse_dot_map, to_double_array)
+from vectordb_testbricks_spark.session import local_relation
 
 
 def queries_df(spark, vectors: list[list[float]]) -> DataFrame:
-    """Build the (query_id, qvec) side from literal query vectors."""
-    return spark.createDataFrame(
+    """Build the (query_id, qvec) side from literal query vectors, as a
+    local relation (session.local_relation): no job, no Python worker."""
+    return local_relation(
+        spark,
         [(i, [float(x) for x in v]) for i, v in enumerate(vectors)],
         T.StructType([
             T.StructField("query_id", T.IntegerType(), False),
@@ -57,16 +60,18 @@ def prepare_search_pool(base: DataFrame, query_sides: list[DataFrame],
                         ) -> list[DataFrame]:
     """Prepared-statement pool for closed-loop serving: one analyzed
     ``knn_search`` DataFrame per query side, built ONCE and re-executed
-    per request. A DataFrame caches its analyzed/optimized plan across
-    actions, so re-collecting a pooled plan skips Catalyst entirely
-    while execution (jobs, scoring, the two-phase top-k, result
+    per request. A DataFrame keeps its QueryExecution across actions, so
+    re-collecting a pooled plan skips both per-request fixed costs of an
+    ad-hoc query: the Python-side plan construction (one py4j round trip
+    per DataFrame/Column call) and Catalyst's analysis, optimization and
+    planning. Execution (jobs, scoring, the two-phase top-k, result
     collection) stays per-request.
 
-    Why this exists (measured, r10, concurrency 10 at the reference's
-    top_k=15000 operating point, go_bench/config.yaml:19-26): building
-    a fresh DataFrame per request spends ~2.7× the serving cost in
-    per-request Catalyst re-analysis of an identical plan — 5.7 QPS
-    ad-hoc vs 15.3 QPS pooled on the same corpus and queries. The
+    Measured r10 (concurrency 10, the reference's top_k=15000 operating
+    point, go_bench/config.yaml:19-26): 5.7 QPS ad-hoc vs 15.3 QPS pooled
+    on the same corpus and queries. That ad-hoc figure also paid Python
+    worker tasks per request to scan its ``createDataFrame`` query side;
+    ``queries_df`` is now a local relation, so neither path runs any. The
     reference's Go driver similarly loads a fixed query-vector set once
     and reuses it for the whole run (config.yaml:24).
 
@@ -231,17 +236,18 @@ def sparse_search_many(base: DataFrame, query_maps: list[dict], map_col: str,
     """V6 at nq>1: one {index: weight} dict per query, ``query_id`` =
     position in ``query_maps``.
 
-    The query side is a tiny broadcast relation, not a literal map: a
-    foldable query_id would constant-fold the top-k window's partition spec
-    away (WindowExec "No Partition Defined"); as an attribute the per-query
-    ranking stays partitioned at any nq.
+    The query side is a broadcast local relation (session.local_relation),
+    not a literal map: a foldable query_id would constant-fold the top-k
+    window's partition spec away (WindowExec "No Partition Defined"); as an
+    attribute the per-query ranking stays partitioned at any nq.
     """
     query_maps = [drop_query_terms(m, drop_ratio_search) for m in query_maps]
     if flt is not None:
         pred = flt if isinstance(flt, Column) else compile_expr(flt, base)
         base = base.filter(pred)
     key_sql = _sparse_key_sql(query_maps)
-    qdf = base.sparkSession.createDataFrame(
+    qdf = local_relation(
+        base.sparkSession,
         [(i, {k_: float(v) for k_, v in m.items()})
          for i, m in enumerate(query_maps)],
         f"query_id int, qmap map<{key_sql},double>")
@@ -324,8 +330,8 @@ def sparse_search_postings_many(
     key_sql = _sparse_key_sql(query_maps)
     qrows = [(i, k_, float(w)) for i, m in enumerate(query_maps)
              for k_, w in m.items()]
-    qdf = spark.createDataFrame(
-        qrows, f"query_id int, _qk {key_sql}, _qw double")
+    qdf = local_relation(
+        spark, qrows, f"query_id int, _qk {key_sql}, _qw double")
     keys = sorted({r[1] for r in qrows})
     if keys:
         # literal In() — this is the predicate that reaches the scan

@@ -1,5 +1,6 @@
-"""SparkSession factory tuned for this engine, and the application-scoped
-memo that holds every piece of prepared per-session state.
+"""SparkSession factory tuned for this engine, the application-scoped
+memo that holds every piece of prepared per-session state, and the one
+builder of literal (driver-side) relations.
 
 Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same config block is
 what we would ship to a multi-executor cluster (AQE on, sane shuffle
@@ -8,11 +9,15 @@ parallelism, Arrow enabled for the few pandas interchange points).
 
 from __future__ import annotations
 
+import datetime
 import os
 import threading
-from typing import Callable, Hashable, TypeVar
+from typing import Callable, Hashable, Sequence, TypeVar
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 _T = TypeVar("_T")
 
@@ -130,3 +135,42 @@ def session_forget(value: object) -> None:
     with _memo_lock:
         for k in [k for k, v in _memo.items() if v is value]:
             del _memo[k]
+
+
+# ------------------------------------------------------- literal relations
+
+def local_relation(spark: SparkSession, rows: Sequence[Sequence],
+                   schema: str | T.StructType) -> DataFrame:
+    """A literal relation (``rows`` under ``schema``, a DDL string or a
+    StructType; zero rows allowed) planned as a JVM ``LocalRelation``.
+
+    This is how every per-query literal side in the package is built.
+    ``spark.createDataFrame(<python list>)`` parallelizes the list into a
+    PythonRDD (``Scan ExistingRDD``): each action over it runs one Python
+    worker task per default-parallelism slice. Here the rows travel as one
+    Arrow stream that the driver decodes straight into a LocalRelation
+    (``LocalTableScan``): no RDD, no Python worker, no job, not even for a
+    ``collect()`` of the relation itself. (Only a stream larger than
+    ``spark.sql.execution.arrow.localRelationThreshold`` would be
+    parallelized instead, still JVM-side.) Arrow carries the values as
+    bytes, so doubles (-0.0, subnormals, NaN, ±inf) and strings round-trip
+    bit-exact, and the schema, nullability included, is ``schema``
+    verbatim. Naive datetimes in a TimestampType column are local time, as
+    ``createDataFrame`` reads them."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for col, field, af in zip(cols, schema.fields, arrow):
+        if isinstance(field.dataType, T.TimestampType):
+            col = [v.astimezone(datetime.timezone.utc)
+                   if isinstance(v, datetime.datetime) and v.tzinfo is None
+                   else v for v in col]
+        arr = pa.array(col, type=af.type)
+        if not field.nullable and arr.null_count:
+            raise ValueError(f"local_relation: NULL in non-nullable "
+                             f"column {field.name!r}")
+        arrays.append(arr)
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow),
+                                 schema)

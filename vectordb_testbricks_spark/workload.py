@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from vectordb_testbricks_spark.manager import CollectionManager
+from vectordb_testbricks_spark.session import local_relation
 
 
 def delete_range_expr(pk_col: str, start: int, end: int) -> str:
@@ -769,8 +770,9 @@ def pressure_summary(mgr: CollectionManager, name: str, pk_col: str,
         record("failed_query", 0, failed=1)
 
     rows = [(op, c[0], c[1], c[2]) for op, c in sorted(counts.items())]
-    return spark.createDataFrame(
-        rows, "op string, requests long, rows_affected long, failed long")
+    return local_relation(
+        spark, rows,
+        "op string, requests long, rows_affected long, failed long")
 
 
 def search_all_collections(mgr: CollectionManager, qvecs: list[list[float]],
